@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.{Embeddings, SimilarityQueries}
+import graft.queries.vector.KnnGraph
+import graft.queries.vector.KnnGraph.Cells._
+
 /** Regenerates PLANS.md content: prints the AQE-final physical plan of
   * each named query (args, or the default flagship set) at sf0.001.
   *
@@ -107,13 +111,16 @@ object Plans {
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (rest.nonEmpty) rest else flagships
     val dir = "/root/testdata/sf0.001"
+    // the declared kNN rows checkpoint; dump the un-materialized build
+    def staged(cells: KnnGraph.Cells) = {
+      val st = KnnGraph.plan(Embeddings.normed(spark, dir), cells)
+      (st.result, Some(st.stages))
+    }
     names.foreach { name =>
-      // sim_knn_graph materializes via localCheckpoint (its executed
-      // plan is a bare RDD scan) — dump the un-materialized pipeline
+      // declared rows that materialize via localCheckpoint have a bare
+      // RDD scan as their executed plan — dump the un-materialized pipeline
       val (df, pinned) = name match {
-        case "sim_knn_graph" =>
-          val (res, buckets) = graft.queries.Round13Queries.knnGraphPlan(spark, dir)
-          (res, Some(Seq(buckets)))
+        case "sim_knn_graph" => staged(Lsh(SimilarityQueries.NBits))
         // the declared row checkpoints; dump the un-materialized pipeline
         case "graph_butterflies_capped" =>
           val (res, capped, cs) =
@@ -157,10 +164,7 @@ object Plans {
           val (res, e, capped) =
             graft.queries.Round16Queries.cappedTrianglesPlan(spark, dir)
           (res, Some(Seq(e, capped)))
-        case "sim_knn_graph_auto" =>
-          val (res, all) =
-            graft.queries.Round16Queries.knnGraphAutoPlan(spark, dir)
-          (res, Some(Seq(all)))
+        case "sim_knn_graph_auto" => staged(LshAuto)
         case "st_incremental_ann" =>
           val (res, stages) =
             graft.queries.Round17Queries.annIncrementalPlan(spark, dir)
@@ -185,56 +189,34 @@ object Plans {
           val (res, stages) =
             graft.queries.Round18Queries.lshTopkAutoPlan(spark, dir)
           (res, Some(stages))
-        case "sim_knn_graph_ivf" =>
-          val (res, cells) =
-            graft.queries.Round19Queries.knnGraphIvfPlan(spark, dir)
-          (res, Some(Seq(cells)))
-        case "sim_knn_graph_ivf_kmeans" =>
-          val (res, stages) =
-            graft.queries.Round19Queries.knnGraphIvfKmeansPlan(spark, dir)
-          (res, Some(stages))
+        case "sim_knn_graph_ivf" => staged(IvfSampled())
+        case "sim_knn_graph_ivf_kmeans" => staged(IvfTrained)
         // the declared row checkpoints; dump the un-materialized twin
         case "st_incremental_ann_ivf" =>
-          val (res, stages) =
-            graft.queries.Round19Queries.annIvfTrainedPlan(spark, dir)
-          (res, Some(stages))
-        case "sim_knn_graph_ivf_scaled" =>
-          val (res, stages) =
-            graft.queries.Round20Queries.knnGraphIvfScaledPlan(spark, dir)
-          (res, Some(stages))
+          val st = graft.queries.Round19Queries
+            .annIvfTrainedPlan(Embeddings.normed(spark, dir))
+          (st.result, Some(st.stages))
+        case "sim_knn_graph_ivf_scaled" => staged(IvfCoarse)
         // ONE un-materialized NN-Descent round over the checkpointed
         // seed (the declared row checkpoints every round; the novel
         // shape is the round body itself)
         case "sim_knn_graph_nnd_round" =>
-          val (seed, stages) =
-            graft.queries.Round20Queries.knnGraphIvfScaledPlan(spark, dir)
-          val g0 = seed.localCheckpoint(true)
-          val (round1, av) =
-            graft.queries.Round20Queries.nndRoundStaged(stages.last, g0)
-          (round1, Some(stages :+ av))
-        case "sim_knn_graph_ivf_hier" =>
-          val (res, stages) =
-            graft.queries.Round20Queries.knnGraphIvfHierPlan(spark, dir)
-          (res, Some(stages))
+          val seed = KnnGraph.plan(Embeddings.normed(spark, dir), IvfCoarse)
+          val g0 = seed.result.localCheckpoint(true)
+          val round1 = KnnGraph.nndRoundStaged(seed.stages.last, g0)
+          (round1.result, Some(seed.stages ++ round1.stages))
+        case "sim_knn_graph_ivf_hier" => staged(IvfHier())
         // ONE un-materialized grouped fine-Lloyd round over the
         // persisted coarse-routed corpus and the checkpointed fine
         // init (the build checkpoints every round; the novel shape is
         // the round body itself)
         case "sim_knn_graph_hier_fine_round" =>
-          import org.apache.spark.sql.functions.col
-          val corpus = graft.Tables.load(spark, dir, "embeddings")
-            .select(col("vec_id"),
-              graft.queries.VectorOps.toDouble(col("embedding")).as("v"))
-            .withColumn("nrm", graft.queries.VectorOps.norm(col("v")))
-            .persist()
+          val corpus = Embeddings.normed(spark, dir).persist()
           corpus.count()
-          val routed = graft.queries.Round20Queries
-            .coarseRouted(corpus).persist()
+          val routed = KnnGraph.coarseRouted(corpus).persist()
           routed.count()
-          val init = graft.queries.Round20Queries
-            .fineInit(routed, corpus).localCheckpoint()
-          (graft.queries.Round20Queries.fineLloydRound(routed, init),
-            Some(Seq(routed, corpus)))
+          val init = KnnGraph.fineInit(routed, corpus).localCheckpoint()
+          (KnnGraph.fineLloydRound(routed, init), Some(Seq(routed, corpus)))
         case _ => (SparkEntry.queries(name)(spark, dir), None)
       }
       df.collect() // finalize AQE so the printed plan is the executed one

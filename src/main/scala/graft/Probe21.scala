@@ -29,8 +29,10 @@ object Probe21 {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.files.maxPartitionBytes", "4m")
-      // AQE off gives classic multi-stage jobs whose stages carry the
-      // real submitting callsite — per-operator attribution the AQE
+      // AQE is on by default, as in every other entry point.
+      // SPARK_GRAFT_PROBE_AQE=false is the opt-in attribution mode:
+      // classic multi-stage jobs whose stages carry the real submitting
+      // callsite — per-operator attribution the AQE
       // stage-materialization jobs hide (diagnostic only)
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_PROBE_AQE", "true"))
@@ -38,25 +40,29 @@ object Probe21 {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var taskMs = 0L
+    // every counter below is read and written only under `lock`: the
+    // listener thread updates them, the main thread resets and reads
+    // them per query
+    val lock = new Object
+    var jobs = 0
+    var stages = 0
+    var tasks = 0
+    var taskMs = 0L
     // per-stage task-time rollup keyed by the stage's callsite line —
     // names the operator that owns the cost, not just the total
-    @volatile var runMs = 0L
-    @volatile var deserMs = 0L
-    @volatile var gcMs = 0L
-    @volatile var resSerMs = 0L
-    @volatile var swMs = 0L
-    @volatile var fetchMs = 0L
+    var runMs = 0L
+    var deserMs = 0L
+    var gcMs = 0L
+    var resSerMs = 0L
+    var swMs = 0L
+    var fetchMs = 0L
     val byStage = scala.collection.mutable.Map.empty[String, (Long, Int)]
     val stageTime = scala.collection.mutable.Map.empty[Int, Long]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        synchronized { jobs += 1 }
+        lock.synchronized { jobs += 1 }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        synchronized {
+        lock.synchronized {
           stages += 1
           tasks += s.stageInfo.numTasks
           // label by the first graft frame in the callsite stack — the
@@ -71,7 +77,7 @@ object Probe21 {
           byStage(key) = (pm + ms, pc + 1)
         }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        synchronized {
+        lock.synchronized {
           if (t.taskInfo != null && t.taskInfo.finished) {
             taskMs += t.taskInfo.duration
             stageTime(t.stageId) =
@@ -106,7 +112,7 @@ object Probe21 {
     spark.catalog.clearCache()
 
     targets.foreach { name =>
-      synchronized {
+      lock.synchronized {
         jobs = 0; stages = 0; tasks = 0; taskMs = 0L
         runMs = 0L; deserMs = 0L; gcMs = 0L; resSerMs = 0L
         swMs = 0L; fetchMs = 0L
@@ -117,13 +123,16 @@ object Probe21 {
       catch { case e: Throwable => System.err.println(s"$name: $e") }
       val wall = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      // listener bus is async; give it a beat to drain before reading
-      Thread.sleep(300)
-      val top = byStage.toSeq.sortBy { case (_, (ms, _)) => -ms }.take(8)
-        .map { case (k, (ms, c)) =>
-          f""""${k.replace('"', ' ').take(90)}":[${ms / 1e3}%.2f,$c]""" }
-        .mkString("{", ",", "}")
-      println(f"""{"query":"$name","wall":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_sec":${taskMs / 1e3}%.3f,"run_sec":${runMs / 1e3}%.3f,"deser_sec":${deserMs / 1e3}%.3f,"gc_sec":${gcMs / 1e3}%.3f,"res_ser_sec":${resSerMs / 1e3}%.3f,"shuf_write_sec":${swMs / 1e3}%.3f,"fetch_wait_sec":${fetchMs / 1e3}%.3f,"top_stages":$top}""")
+      // the listener bus is async: wait until every posted event has
+      // been delivered before reading
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      lock.synchronized {
+        val top = byStage.toSeq.sortBy { case (_, (ms, _)) => -ms }.take(8)
+          .map { case (k, (ms, c)) =>
+            f""""${k.replace('"', ' ').take(90)}":[${ms / 1e3}%.2f,$c]""" }
+          .mkString("{", ",", "}")
+        println(f"""{"query":"$name","wall":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_sec":${taskMs / 1e3}%.3f,"run_sec":${runMs / 1e3}%.3f,"deser_sec":${deserMs / 1e3}%.3f,"gc_sec":${gcMs / 1e3}%.3f,"res_ser_sec":${resSerMs / 1e3}%.3f,"shuf_write_sec":${swMs / 1e3}%.3f,"fetch_wait_sec":${fetchMs / 1e3}%.3f,"top_stages":$top}""")
+      }
     }
     spark.stop()
   }

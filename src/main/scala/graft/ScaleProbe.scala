@@ -3,6 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Staged
+import graft.queries.vector.KnnGraph
+import graft.queries.vector.KnnGraph.Cells._
+import graft.queries.vector.KnnGraph.Refine.Nnd
+
 /** Scaling-evidence harness: replicates the sf0.1 documents/embeddings
   * corpus ×m with per-replica perturbations that kill cross-replica
   * similarity (rotated alphabet for text, one flipped dimension for
@@ -564,8 +569,7 @@ object ScaleProbe {
       case "dedup_embedding_ann_auto_prod" =>
         val (p, v, g) = queries.Round16Queries
           .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9)
-        try p.localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
+        Staged(p, Seq(g, v)).materialize()
       // the prod config through the round-17b hot-bucket grid guard —
       // same pair set; measures the guard's wall-time effect where the
       // load profile says the skew lives
@@ -573,8 +577,7 @@ object ScaleProbe {
         val (p, v, g) = queries.Round16Queries
           .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9,
             gridHotLoad = operators.Salting.DeriveHotLoad)
-        try p.localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
+        Staged(p, Seq(g, v)).materialize()
       // pseudo-name: home-bucket load profile of the auto-width ANN
       // index (table 0, the production config's widths) — the DIRECT
       // witness for the candidate-volume model: candidates per table
@@ -667,8 +670,7 @@ object ScaleProbe {
       case "st_incremental_ann_auto_prod" =>
         val (p, v, g) = queries.Round16Queries
           .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = 0.9)
-        try queries.Round17Queries.annVerdict(p, v).localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
+        Staged(queries.Round17Queries.annVerdict(p, v), Seq(g, v)).materialize()
       // diagnostic twin: τ = -2 disables the verify filter, so `rows`
       // IS the candidate-pair volume — the number the width rule is
       // supposed to hold linear (candidates ≈ (1+bits)·n²/2^bits per
@@ -676,8 +678,7 @@ object ScaleProbe {
       case "dedup_embedding_ann_auto_cand" =>
         val (p, v, g) = queries.Round16Queries
           .annAutoPairs(spark, dir, radius = 1, tables = 8, tau = -2.0)
-        try p.localCheckpoint(true)
-        finally { g.unpersist(false); v.unpersist(false) }
+        Staged(p, Seq(g, v)).materialize()
       // pseudo-name: convergence-driven co-partitioned PageRank
       // (eps = 1e8 picounits = 1e-4 rank). Emits a per-round JSON trace —
       // round seconds must stay FLAT as rounds accumulate (checkpoint
@@ -726,10 +727,10 @@ object ScaleProbe {
       case "dedup_simhash_banded_grd_c256" =>
         val (p, d) = queries.DedupQueries
           .simhashBandedPairsGuarded(spark, dir, hotLoad = 256L)
-        try p.localCheckpoint(true) finally d.unpersist(false)
+        Staged(p, Seq(d)).materialize()
       case "dedup_simhash_banded_grd_drv" =>
         val (p, d) = queries.DedupQueries.simhashBandedPairsGuarded(spark, dir)
-        try p.localCheckpoint(true) finally d.unpersist(false)
+        Staged(p, Seq(d)).materialize()
       // stage decomposition of the IVF-cell kNN build: cells = the
       // argmin/probe pass alone; cand = + candidate join and exact
       // cosine (count forces the math via an agg over the column);
@@ -749,14 +750,8 @@ object ScaleProbe {
       case "sim_knn_graph_ivf_npr_sweep" =>
         Seq(1, 2, 4).foreach { npr =>
           val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, cells) =
-                queries.Round19Queries.knnGraphIvfPlanFrom(base, npr)
-              try res.localCheckpoint(true) finally cells.unpersist(false)
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"ivf_npr$npr" -> fn))
+          val rec = KnnGraph.graphRecallOver(spark, dir, Seq(s"ivf_npr$npr" ->
+              (base => KnnGraph.plan(base, IvfSampled(npr)).materialize())))
             .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
           val dt = (System.nanoTime() - t0) / 1e9
           println(s"""{"metric":"knn_graph_ivf_npr","multiplier":$m,""" +
@@ -771,15 +766,8 @@ object ScaleProbe {
       case "sim_knn_graph_nnd_rounds_sweep" =>
         Seq(1, 2, 3).foreach { r =>
           val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, stages) =
-                queries.Round20Queries.knnGraphNndPlanFrom(base, r)
-              try res.localCheckpoint(true)
-              finally stages.foreach(_.unpersist(false))
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"nnd_r$r" -> fn))
+          val rec = KnnGraph.graphRecallOver(spark, dir, Seq(s"nnd_r$r" ->
+              (base => KnnGraph.plan(base, IvfCoarse, Nnd(r)).materialize())))
             .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
           val dt = (System.nanoTime() - t0) / 1e9
           println(s"""{"metric":"knn_graph_nnd_rounds","multiplier":$m,""" +
@@ -797,23 +785,8 @@ object ScaleProbe {
       case "sim_knn_graph_nnd_kmseed_sweep" =>
         Seq(0, 1, 2, 3).foreach { r =>
           val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val cells = queries.Round19Queries.trainedCellsFrom(base)
-              try {
-                var g = queries.Round19Queries
-                  .cellGraphServe(cells, queries.Round20Queries.KnnNndWidth)
-                  .localCheckpoint(true)
-                val corpus = base.persist()
-                for (_ <- 1 to r)
-                  g = queries.Round20Queries.nndRound(corpus, g)
-                try g.filter(col("rank") <= queries.Round13Queries.KnnK)
-                  .localCheckpoint(true)
-                finally corpus.unpersist(false)
-              } finally cells.unpersist(false)
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"nnd_km_r$r" -> fn))
+          val rec = KnnGraph.graphRecallOver(spark, dir, Seq(s"nnd_km_r$r" ->
+              (base => KnnGraph.plan(base, IvfTrained, Nnd(r)).materialize())))
             .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
           val dt = (System.nanoTime() - t0) / 1e9
           println(s"""{"metric":"knn_graph_nnd_kmseed","multiplier":$m,""" +
@@ -835,15 +808,8 @@ object ScaleProbe {
       case "sim_knn_graph_hier_fiters_sweep" =>
         Seq(0, 1, 2, 3).foreach { fi =>
           val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, stages) = queries.Round20Queries
-                .knnGraphIvfHierPlanFrom(base, fineIters = fi)
-              try res.localCheckpoint(true)
-              finally stages.foreach(_.unpersist(false))
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"hier_fi$fi" -> fn))
+          val rec = KnnGraph.graphRecallOver(spark, dir, Seq(s"hier_fi$fi" ->
+              (base => KnnGraph.plan(base, IvfHier(fi)).materialize())))
             .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
           val dt = (System.nanoTime() - t0) / 1e9
           println(s"""{"metric":"knn_graph_hier_fiters","multiplier":$m,""" +
@@ -857,15 +823,8 @@ object ScaleProbe {
       case "sim_knn_graph_nnd_hier_rounds_sweep" =>
         Seq(1, 2, 3).foreach { r =>
           val t0 = System.nanoTime()
-          val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-            base => {
-              val (res, stages) = queries.Round20Queries
-                .knnGraphNndHierPlanFrom(base, r)
-              try res.localCheckpoint(true)
-              finally stages.foreach(_.unpersist(false))
-            }
-          val rec = queries.Round19Queries
-            .graphRecallOver(spark, dir, Seq(s"nnd_hier_r$r" -> fn))
+          val rec = KnnGraph.graphRecallOver(spark, dir, Seq(s"nnd_hier_r$r" ->
+              (base => KnnGraph.plan(base, IvfHier(), Nnd(r)).materialize())))
             .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
           val dt = (System.nanoTime() - t0) / 1e9
           println(s"""{"metric":"knn_graph_nnd_hier_rounds","multiplier":$m,""" +
@@ -875,38 +834,32 @@ object ScaleProbe {
         }
         spark.range(1).toDF("ok")
       case "sim_knn_graph_scaled_sampled_recall" =>
-        val fn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          base => {
-            val stages = queries.Round20Queries.sampledCellsFrom(base)
-            try queries.Round19Queries.cellGraphServe(stages.head)
-              .localCheckpoint(true)
-            finally stages.foreach(_.unpersist(false))
-          }
-        val rec = queries.Round19Queries
-          .graphRecallOver(spark, dir, Seq("sampled_coarse" -> fn))
+        val rec = KnnGraph.graphRecallOver(spark, dir, Seq("sampled_coarse" ->
+            (base => {
+              val stages = KnnGraph.sampledCoarseCells(base)
+              Staged(KnnGraph.cellGraphServe(stages.head), stages).materialize()
+            })))
           .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h")).head
         println(s"""{"metric":"knn_graph_scaled_sampled","multiplier":$m,""" +
           s""""mean_recall":${rec.getDouble(0)},"hits":${rec.getLong(1)}}""")
         spark.range(1).toDF("ok")
       case "sim_knn_graph_ivf_cells" =>
-        val (_, cells) = queries.Round19Queries.knnGraphIvfPlan(spark, dir)
-        try cells.agg(sum(expr("cells[0]"))).localCheckpoint(true)
-        finally cells.unpersist(false)
+        val cells = KnnGraph.cellStage(queries.Embeddings.normed(spark, dir),
+          IvfSampled())
+        Staged(cells.head.agg(sum(expr("cells[0]"))), cells).materialize()
       case "sim_knn_graph_ivf_cand" =>
-        val (_, cells) = queries.Round19Queries.knnGraphIvfPlan(spark, dir)
-        try {
-          val homes = cells.select(col("vec_id"), col("v"), col("nrm"),
-            col("cells").getItem(0).as("cell"))
-          val probes = cells.select(col("vec_id").as("query_id"),
-            col("v").as("qv"), col("nrm").as("qn"),
-            explode(col("cells")).as("cell"))
-          functions.GraftFunctions.register(spark)
-          homes.join(probes.hint("shuffle_hash"), Seq("cell"))
-            .filter(col("vec_id") =!= col("query_id"))
-            .select(expr("round(vec_dot(v, qv) / (nrm * qn), 6)").as("cosine"))
-            .agg(sum(col("cosine")))
-            .localCheckpoint(true)
-        } finally cells.unpersist(false)
+        val Seq(cells) = KnnGraph.cellStage(queries.Embeddings.normed(spark, dir),
+          IvfSampled())
+        val homes = cells.select(col("vec_id"), col("v"), col("nrm"),
+          col("cells").getItem(0).as("cell"))
+        val probes = cells.select(col("vec_id").as("query_id"),
+          col("v").as("qv"), col("nrm").as("qn"),
+          explode(col("cells")).as("cell"))
+        functions.GraftFunctions.register(spark)
+        Staged(homes.join(probes.hint("shuffle_hash"), Seq("cell"))
+          .filter(col("vec_id") =!= col("query_id"))
+          .select(expr("round(vec_dot(v, qv) / (nrm * qn), 6)").as("cosine"))
+          .agg(sum(col("cosine"))), Seq(cells)).materialize()
       case "sim_knn_graph_recall_means" | "sim_knn_graph_recall_scale_means" =>
         // the full declared row runs ALL FOUR builds — including the
         // fixture 8-bit teaching config, quadratic past ×10; the
@@ -916,8 +869,10 @@ object ScaleProbe {
         val df =
           if (name == "sim_knn_graph_recall_means")
             SparkEntry.queries("sim_knn_graph_recall")(spark, dir)
-          else queries.Round19Queries.graphRecallOver(spark, dir,
-            queries.Round19Queries.scalePathBuilds)
+          else KnnGraph.graphRecallOver(spark, dir,
+            KnnGraph.Builds.filterNot(_.cells.isInstanceOf[Lsh])
+              .map(b => b.label -> ((base: DataFrame) =>
+                KnnGraph.plan(base, b.cells, b.refine).materialize())))
         val parts = df.groupBy(col("build"))
           .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h"))
           .orderBy(col("build"))

@@ -28,7 +28,7 @@ object Tables {
     *    fixture ns residue is 0 so no information is lost);
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads TIMESTAMP_NTZ;
     *    cast to TimestampType — value-preserving under the engine-wide UTC
-    *    session timezone (Session.scala) and matches what DuckDB's naive
+    *    session timezone and matches what DuckDB's naive
     *    read sees, so downstream window/watermark code sees ONE type.
     */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {

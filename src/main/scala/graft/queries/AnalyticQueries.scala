@@ -794,9 +794,7 @@ object AnalyticQueries {
     QueryDef(
       "sim_radius_search",
       (s, dir) => {
-        val v = t(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val v = Embeddings.normed(s, dir)
         val q = v.filter(col("vec_id") === 0)
           .select(col("v").as("qv"), col("nrm").as("qnrm"))
         // broadcast the single query row; the corpus side streams — the

@@ -30,13 +30,7 @@ import graft.Tables
   */
 object CurationQueries {
 
-  /** 60-bit integer from md5 — Spark SQL dialect (same recipe as
-    * DedupQueries.h60Spark).
-    */
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
+  import Hash60.{h60Duck, h60Spark}
 
   /** documents → (doc_id, toks) spread over every core (single-file
     * fixture scans as one partition; a multi-file corpus would already

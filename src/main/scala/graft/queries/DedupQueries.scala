@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Staged
 
 /** Deduplication operators for a training-data pipeline, over
   * `documents(doc_id, text, ...)` and `embeddings(vec_id, embedding)`.
@@ -23,6 +24,8 @@ import graft.Tables
   * declared reference/recall oracles over the bounded fixtures.
   */
 object DedupQueries {
+
+  import Hash60.{h60Duck, h60Spark}
 
   // ── shared minhash constants (embedded in both engines' exprs) ─────
   val P: Long = 4294967311L // prime > 2^32; keeps a*h+b < 2^63
@@ -119,14 +122,6 @@ object DedupQueries {
   /** (bit offset, width) per band: 8 bands of 5 bits + 5 of 4 = 60. */
   val SimhashBandDefs: Seq[(Int, Int)] = simhashBandDefs(SimhashMaxHamming)
 
-  /** 60-bit integer from md5 — Spark SQL dialect. */
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-
-  /** Same, DuckDB dialect. */
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
   /** documents → (doc_id, shingles: distinct word 3-grams). The fixture
     * is one small parquet file (= one scan partition); repartition so the
     * interpreted shingling transform uses every core, as a multi-file
@@ -186,8 +181,7 @@ object DedupQueries {
     * corpus-sized cached blocks into the caller's session.
     */
   private def selfContained(result: DataFrame, stages: Dataset[_]*): DataFrame =
-    try result.localCheckpoint(true)
-    finally stages.foreach(_.unpersist(false))
+    Staged(result, stages.map(_.toDF())).materialize()
 
   /** documents → (doc_id, 60-bit word-level simhash). Shared by the
     * all-pairs reference form and the banded scale form — the signature
@@ -648,9 +642,7 @@ object DedupQueries {
     QueryDef(
       "dedup_embedding_cosine",
       (s, dir) => {
-        val v = Tables.load(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val v = Embeddings.normed(s, dir)
           // single-file scan = one partition; spread the O(n²) stream side
           .transform(graft.operators.Layouts.spread)
           .persist()
@@ -786,9 +778,7 @@ object DedupQueries {
     // `1L << b`, so an over-wide width must fail here, before any job runs
     require(bits >= 1 && bits <= 62,
       s"signature width $bits outside [1, 62]: Long bucket keys wrap past 62 bits")
-    val v = Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
+    val v = Embeddings.normed(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     def sigCol(t: Int): Column = annSigCol(t, bits)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.operators.Staged
 
 /** Round-10 training-data pipeline operators: the published corpus-hygiene
   * passes a 100 TB pretraining build runs that the round-4..9 surface did
@@ -45,6 +46,8 @@ import graft.Tables
   */
 object Round10Queries {
 
+  import Hash60.{h60Duck, h60Spark}
+
   /** Segment length (tokens) for boilerplate removal; a segment counts as
     * boilerplate when it appears verbatim in ≥ MinDupDocs distinct docs.
     * (The fixture's 31-word vocabulary yields 168 such segments at
@@ -72,12 +75,6 @@ object Round10Queries {
   /** Hashing-trick dimension for the quality classifier. */
   val ClassifierD = 4096
 
-  /** 60-bit integer from md5 — same recipe as DedupQueries/CurationQueries. */
-  private def h60(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
   private def tokenized(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
       .transform(graft.operators.Layouts.spread)
@@ -85,13 +82,6 @@ object Round10Queries {
 
   private val tokenizedDuck =
     "(SELECT doc_id, lang, string_split(lower(text), ' ') AS toks FROM documents)"
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-       nvecs AS (
-         SELECT vec_id, v, %s AS nrm FROM vecs)""".format(VectorOps.duckNorm("v"))
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -279,9 +269,7 @@ object Round10Queries {
       "pipe_semdedup",
       (s, dir) => {
         import SimilarityQueries.{CentroidCap, CentroidEvery}
-        val all = Tables.load(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val all = Embeddings.normed(s, dir)
           .transform(graft.operators.Layouts.spread)
         val cents = all.filter(col("vec_id") % CentroidEvery === 0 &&
             col("vec_id") < CentroidEvery * CentroidCap)
@@ -296,7 +284,7 @@ object Round10Queries {
           .select(col("vec_id"), col("v"), col("nrm"), col("cent_id").as("cell"))
         semdedupPrune(assign)
       },
-      Some(s"""WITH $vectorsDuck,
+      Some(s"""WITH ${Embeddings.normedDuck},
           cents AS (
             SELECT vec_id AS cent_id, v AS cv FROM nvecs
             WHERE vec_id % ${SimilarityQueries.CentroidEvery} = 0
@@ -340,9 +328,7 @@ object Round10Queries {
       (s, dir) => {
         import SimilarityQueries.CentroidEvery
         val CoarseEvery = CentroidEvery * CentroidEvery
-        val all = Tables.load(s, dir, "embeddings")
-          .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-          .withColumn("nrm", VectorOps.norm(col("v")))
+        val all = Embeddings.normed(s, dir)
           .transform(graft.operators.Layouts.spread)
         val coarse = all.filter(col("vec_id") % CoarseEvery === 0)
           .select(col("vec_id").as("c2"), col("v").as("c2v"))
@@ -376,7 +362,7 @@ object Round10Queries {
       Some {
         import SimilarityQueries.CentroidEvery
         val coarseEvery = CentroidEvery * CentroidEvery
-        s"""WITH $vectorsDuck,
+        s"""WITH ${Embeddings.normedDuck},
           coarse AS (SELECT vec_id AS c2, v AS c2v FROM nvecs
             WHERE vec_id % $coarseEvery = 0),
           fine AS (SELECT vec_id AS cent_id, v AS cv FROM nvecs
@@ -612,11 +598,11 @@ object Round10Queries {
             .as("g"))
         // h = bucket in [0, D); w = ((h60(bucket-string) % 2049) - 1024) / 1024
         val scored = grams.select(col("doc_id"), col("lang"),
-          expr(s"pmod(${h60("g")}, $ClassifierD)").as("h"))
+          expr(s"pmod(${h60Spark("g")}, $ClassifierD)").as("h"))
           .select(col("doc_id"), col("lang"),
             // CAST(1024 AS DOUBLE): a bare 1024.0 literal is DECIMAL in
             // Spark SQL and the division silently goes decimal-typed
-            expr(s"(pmod(${h60("concat('w', cast(h as string))")}, 2049) - 1024) / cast(1024 as double)")
+            expr(s"(pmod(${h60Spark("concat('w', cast(h as string))")}, 2049) - 1024) / cast(1024 as double)")
               .as("w"))
         scored.groupBy(col("doc_id"), col("lang"))
           .agg(count(lit(1)).as("n_feats"), sum(col("w")).as("sw"))
@@ -811,8 +797,7 @@ object Round10Queries {
     * sides, so it persists for the query and must release after.
     */
   private def selfContainedDocs(result: DataFrame, cached: DataFrame): DataFrame =
-    try result.localCheckpoint(true)
-    finally cached.unpersist(false)
+    Staged(result, Seq(cached)).materialize()
 
   /** SemDeDup's in-cell prune + per-vector verdict, shared by the fixed-k
     * and load-scaled variants: a vector is pruned when a smaller-id
@@ -896,8 +881,7 @@ object Round10Queries {
       .orderBy(col("merge_rank"))
     if (!materialize) out
     else
-      try out.localCheckpoint(true)
-      finally Seq(sym0, s1, s2).foreach(_.unpersist(false))
+      Staged(out, Seq(sym0, s1, s2)).materialize()
   }
 
   /** Containment candidate pairs BEFORE the τ threshold (Broder 1997):

@@ -44,6 +44,8 @@ import graft.Tables
   */
 object Round11Queries {
 
+  import Hash60.{h60Duck, h60Spark}
+
   // ── C4 line-cleaning constants (Raffel et al. 2020 §2.2) ───────────
   /** Synthesized line length in tokens (the fixture corpus has no real
     * newlines — the deterministic segmentation is the same move as
@@ -83,11 +85,6 @@ object Round11Queries {
   /** Levenshtein accept threshold for a candidate pair. */
   val ErMaxLev = 1
 
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
   /** documents → (doc_id, lang, toks), spread over every core. */
   private def tokenized(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
@@ -96,16 +93,6 @@ object Round11Queries {
 
   private val tokenizedDuck =
     "(SELECT doc_id, lang, string_split(lower(text), ' ') AS toks FROM documents)"
-
-  /** embeddings → (vec_id, v: array<double>). */
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
 
   /** Interpolated-KN probability, shared expression text (runs verbatim
     * in both Spark SQL and DuckDB so the IEEE op order is identical).
@@ -127,7 +114,7 @@ object Round11Queries {
 
   /** The PQ/ADC oracle as a named val — the round-18 contract recall row nests this IDENTICAL statement (one definition, no drift). */
   private[queries] lazy val pqTopkDuckSql: String =
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Embeddings.duck},
           cents AS (
             SELECT CAST(vec_id / $PqCentEvery AS INT) AS code_id, v AS cv FROM vecs
             WHERE vec_id % $PqCentEvery = 0 AND vec_id < ${PqCentEvery * PqK}),
@@ -425,7 +412,7 @@ object Round11Queries {
       "sim_pq_topk",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s) // vec_dist2 on the SQL surface
-        val all = vectors(s, dir)
+        val all = Embeddings.load(s, dir)
         val cents = all
           .filter(col("vec_id") % PqCentEvery === 0 &&
             col("vec_id") < PqCentEvery * PqK)

@@ -43,6 +43,8 @@ import graft.Tables
   */
 object Round11bQueries {
 
+  import Hash60.{h60Duck, h60Spark}
+
   // ── k-means constants ──────────────────────────────────────────────
   /** Clusters; init = the first K corpus vectors (deterministic seed,
     * the sim_ivf_topk "trained on a fixed sample" stance). */
@@ -73,21 +75,6 @@ object Round11bQueries {
   /** Target dimensionality. 16 = 4² keeps the 1/√R scale EXACT (÷4),
     * so no irrational constant enters the oracle compare. */
   val RpDim = 16
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
-
-  /** embeddings → (vec_id, v: array<double>). */
-  private[queries] def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private[queries] val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
 
   // ════ k-means builder (shared by sim_kmeans and kmeansUntil) ═══════
 
@@ -140,7 +127,7 @@ object Round11bQueries {
 
   private[queries] def kmeansInit(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(s)
-    val vecs = vectors(s, dir)
+    val vecs = Embeddings.load(s, dir)
     val c0 = vecs.filter(col("vec_id") < KmK)
       .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
     (vecs, c0)
@@ -198,7 +185,7 @@ object Round11bQueries {
     * cv) rows over `vecs`) — the auto-K consumer passes a
     * count-derived threshold as a scalar subquery. */
   private[queries] def kmDuckPrefixFrom(c0Sql: String, iters: Int): String =
-    s"""$vectorsDuck,
+    s"""${Embeddings.duck},
         c0 AS ($c0Sql),
         ${(1 to iters).map(kmDuckIter).mkString(",\n")}"""
 
@@ -448,9 +435,9 @@ object Round11bQueries {
                 transform(sequence(0, ${Dim - 1}), j ->
                   CASE WHEN ${h60Spark("concat('rp:', cast(kk as string), ':', cast(j as string))")} % 2 = 0
                        THEN cast(1.0 as double) ELSE cast(-1.0 as double) END))"""
-        val sgn = vectors(s, dir).sparkSession.range(1)
+        val sgn = Embeddings.load(s, dir).sparkSession.range(1)
           .select(expr(sgnExpr).as("sgn"))
-        vectors(s, dir)
+        Embeddings.load(s, dir)
           .crossJoin(broadcast(sgn))
           .select(col("vec_id"), col("v"), col("sgn"),
             explode(sequence(lit(0), lit(RpDim - 1))).as("k"))
@@ -459,7 +446,7 @@ object Round11bQueries {
               .as("proj"))
           .orderBy(col("vec_id"), col("k"))
       },
-      Some(s"""WITH $vectorsDuck,
+      Some(s"""WITH ${Embeddings.duck},
           sgn AS (
             SELECT list_transform(range(0, $RpDim), kk ->
               list_transform(range(0, $Dim), j ->

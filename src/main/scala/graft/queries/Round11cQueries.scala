@@ -157,7 +157,7 @@ object Round11cQueries {
       "pipe_decontaminate_semantic",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
-        val vecs = Round11bQueries.vectors(s, dir)
+        val vecs = Embeddings.load(s, dir)
         val eva = vecs.filter(col("vec_id") < SemEvalN)
           .select(struct(col("vec_id").as("eid"), col("v").as("ev")).as("e"))
           .agg(sort_array(collect_list(col("e"))).as("evals"))
@@ -177,7 +177,7 @@ object Round11cQueries {
       Some {
         val cos = s"round(${VectorOps.duckDot("a.v", "e.ev")}" +
           s" / (sqrt(${VectorOps.duckDot("a.v", "a.v")}) * sqrt(${VectorOps.duckDot("e.ev", "e.ev")})), 6)"
-        s"""WITH ${Round11bQueries.vectorsDuck},
+        s"""WITH ${Embeddings.duck},
           ev AS (SELECT vec_id AS eid, v AS ev FROM vecs WHERE vec_id < $SemEvalN),
           sc AS (
             SELECT a.vec_id, e.eid, $cos AS c

@@ -35,6 +35,8 @@ import graft.Tables
   */
 object Round11dQueries {
 
+  import Hash60.{h60Duck, h60Spark}
+
   // ── DoReMi constants ───────────────────────────────────────────────
   /** EG step size (η in the paper). */
   val EgEta = 0.5
@@ -44,11 +46,6 @@ object Round11dQueries {
   /** Privacy budget ε; Laplace scale = Δf/ε = 1/ε (Δf = 1: one
     * document changes exactly one disjoint histogram cell). */
   val DpEpsilon = 1.0
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   /** One EG step: x = round(w_prev · exp(η·excess), 9) as exact
     * DECIMAL, renormalize by the exact sum, round the weight to 6. */

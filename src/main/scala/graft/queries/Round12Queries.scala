@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import graft.operators.Staged
 
 /** Round-12 batch: curation-at-scale twins + schedule math —
   *
@@ -39,6 +40,8 @@ import graft.Tables
   */
 object Round12Queries {
 
+  import Hash60.h60Spark
+
   // ── Bloom filter constants ─────────────────────────────────────────
   /** Bitmap size: 2^16 bits = 1024 longs = 8 KiB — fixed no matter how
     * large the eval set grows (the whole point vs the shingle index).
@@ -60,11 +63,6 @@ object Round12Queries {
   val MadZ = 3.5
 
   private val EvalMod = 17
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   private def tokenized(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
@@ -200,8 +198,7 @@ object Round12Queries {
         // materialize the (tiny) per-doc rollup, then release the
         // corpus-sized shingle cache — the selfContained persist-scoping
         // discipline (DedupQueries.scala)
-        try res.localCheckpoint(true)
-        finally sh.unpersist(false)
+        Staged(res, Seq(sh)).materialize()
       },
       Some(s"""WITH sh AS (
           SELECT doc_id,

@@ -50,15 +50,6 @@ object Round12bQueries {
       }
     }
 
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
-
   private def tokenized(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
       .transform(graft.operators.Layouts.spread)
@@ -115,7 +106,7 @@ object Round12bQueries {
 
   /** The exact-MIPS oracle as a named val — it is BOTH a declared row and the round-18 contract recall row's inner-product truth (one definition, no drift). */
   private[queries] lazy val mipsTopkDuckSql: String =
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Embeddings.duck},
           q AS (SELECT vec_id AS query_id, v AS qv FROM vecs
                 WHERE vec_id < $NQueries),
           ips AS (
@@ -145,7 +136,7 @@ object Round12bQueries {
         val qBucketSql = (0 until NBits).map { b =>
           s"(CASE WHEN ${headSql(b)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
         }.mkString(" + ")
-        s"""WITH $vectorsDuck,
+        s"""WITH ${Embeddings.duck},
           nv AS (SELECT vec_id, v, ${VectorOps.duckNorm("v")} AS nrm FROM vecs),
           mx AS (SELECT max(nrm) AS mm FROM nv),
           bucketed AS (
@@ -181,7 +172,7 @@ object Round12bQueries {
     QueryDef(
       "sim_mips_topk",
       (s, dir) => {
-        val all = vectors(s, dir)
+        val all = Embeddings.load(s, dir)
         val q = all.filter(col("vec_id") < NQueries)
           .select(col("vec_id").as("query_id"), col("v").as("qv"))
         val w = Window.partitionBy(col("query_id"))
@@ -212,7 +203,7 @@ object Round12bQueries {
     QueryDef(
       "sim_mips_lsh_topk",
       (s, dir) => {
-        val all = vectors(s, dir)
+        val all = Embeddings.load(s, dir)
           .withColumn("nrm", VectorOps.norm(col("v")))
         val mx = all.agg(max(col("nrm")).as("mm"))
         // corpus bucket: sign bits of dot([v/M; ext], h) =
@@ -239,7 +230,7 @@ object Round12bQueries {
         val probeCol = array(
           (col("qb") +: (0 until NBits).map(b =>
             col("qb").bitwiseXOR(lit(1 << b)))): _*)
-        val q = vectors(s, dir).filter(col("vec_id") < NQueries)
+        val q = Embeddings.load(s, dir).filter(col("vec_id") < NQueries)
           .withColumn("qb", qBucketCol)
           .select(col("vec_id").as("query_id"), col("v").as("qv"),
             explode(probeCol).as("bucket"))

@@ -26,9 +26,9 @@ import graft.Tables
   *  - l-DIVERSITY audit (Machanavajjhala et al. 2007): distinct
   *    sensitive values per quasi-identifier cell — the release check
   *    k-anonymity misses (a cell can hold ≥ k rows all from one user);
-  *  - the sign-LSH kNN GRAPH: per-vector top-k neighbors among
-  *    multiprobe bucket-mates — the build step ahead of graph-based
-  *    ANN serving and graph-side corpus analyses.
+  *  - semantic clusters over the sign-LSH kNN graph
+  *    (`vector.KnnGraph`): τ-edges resolved with the shared CC operator,
+  *    plus the hash-green τ-edge rows.
   *
   * Reference scope note: alxmancilla/parquet-demo has no analytics
   * surface (src/parquet_demo/io.py:21-66 is type coercion + ETL
@@ -36,25 +36,9 @@ import graft.Tables
   */
 object Round13Queries {
 
-  import SimilarityQueries.{NBits, hyperplaneSet}
-
-  /** Two independent sign-LSH tables for the kNN graph (family offsets
-    * unused by every other LSH consumer): union-of-tables is the
-    * standard recall amplifier when every vector is a query — Hamming-1
-    * multiprobe on ONE table left recall at ~0.15 on the near-random
-    * fixture, two tables clear ~0.3 at 2× candidate cost. Width
-    * parameterized for the bits~log2(n) scale rule (the
-    * dedup_embedding_ann_scaled discipline): candidates grow as
-    * n²/2^bits per table, so widening the signature with the corpus
-    * holds per-bucket load — and probe cost — constant.
-    */
-  def knnTables(bits: Int): Seq[Seq[Seq[Double]]] =
-    Seq(hyperplaneSet(11, bits), hyperplaneSet(12, bits))
-
-  /** Production-width signature for the scaled kNN twin (2^12 buckets —
-    * the log2 rule's setting for the ×26–×50 probe corpora).
-    */
-  val KnnScaledBits = 12
+  import SimilarityQueries.NBits
+  import vector.KnnGraph
+  import vector.KnnGraph.Cells.Lsh
 
   /** Synchronous label-propagation rounds (fixed — both engines replay
     * the identical unrolled recursion; bipartite graphs can oscillate,
@@ -71,7 +55,7 @@ object Round13Queries {
   val LDiversity = 3
 
   /** kNN graph degree. */
-  val KnnK = 5
+  final val KnnK = 5
 
   /** Monroe-prior total pseudo-count and report size. */
   val OddsAlpha0 = 500.0
@@ -101,18 +85,6 @@ object Round13Queries {
   private val tokenizedDuck =
     """(SELECT doc_id, lang, source, unnest(string_split(lower(text), ' ')) AS tok
        FROM documents)"""
-
-  private[queries] def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
-
-  private[queries] val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
-       nvecs AS (
-         SELECT vec_id, v, %s AS nrm FROM vecs)""".format(VectorOps.duckNorm("v"))
 
   /** Shared hourly (event_type, ws, n) rollup — the ev_rate_anomaly
     * series (one map-side-combinable shuffle collapses the corpus;
@@ -338,103 +310,6 @@ object Round13Queries {
       $rounds"""
   }
 
-  /** The two-table multiprobe kNN graph (vec_id, rank, neighbor_id,
-    * cosine) — shared by sim_knn_graph and sim_semantic_clusters.
-    * Materialized (localCheckpoint) so the corpus-bucket cache releases
-    * before the caller composes further stages.
-    */
-  private[graft] def knnGraph(s: SparkSession, dir: String,
-      bits: Int = NBits): DataFrame = {
-    val (res, all) = knnGraphPlan(s, dir, bits)
-    try res.localCheckpoint(true)
-    finally all.unpersist(false)
-  }
-
-  /** Materializing form over a caller-prepared corpus (see
-    * [[knnGraphPlanFrom]]).
-    */
-  private[graft] def knnGraphFrom(base: DataFrame,
-      bits: Int = NBits): DataFrame = {
-    val (res, all) = knnGraphPlanFrom(base, bits)
-    try res.localCheckpoint(true)
-    finally all.unpersist(false)
-  }
-
-  /** The un-materialized kNN pipeline plus its persisted bucket stage —
-    * `knnGraph` checkpoints it (so composing consumers read blocks, not
-    * lineage); Plans dumps this form, since the checkpointed result's
-    * plan is a bare RDD scan.
-    */
-  private[graft] def knnGraphPlan(s: SparkSession, dir: String,
-      bits: Int = NBits): (DataFrame, DataFrame) =
-    knnGraphPlanFrom(vectors(s, dir), bits)
-
-  /** The same pipeline over a caller-prepared (vec_id, v, nrm) corpus —
-    * the round-20 shared-prepared-corpus seam: the declared rows pass
-    * the raw scan (plan unchanged), the graph-recall audit threads ONE
-    * persisted corpus through every build it prices (the
-    * sim_index_recall discipline).
-    */
-  private[graft] def knnGraphPlanFrom(base: DataFrame,
-      bits: Int = NBits): (DataFrame, DataFrame) = {
-    val s = base.sparkSession
-    val tables = knnTables(bits)
-    def bucketCol(t: Int) = (0 until bits).map { b =>
-      when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
-        lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
-    val all = base
-      .withColumn("b0", bucketCol(0)).withColumn("b1", bucketCol(1))
-      .transform(graft.operators.Layouts.spread)
-      .persist()
-    // per table: own bucket + the `bits` Hamming-1 flips; the table
-    // index is folded into the join key so tables never cross-match
-    def probeCol(bc: String, t: Int) = array(
-      ((col(bc) + lit(t << bits)) +: (0 until bits).map(b =>
-        col(bc).bitwiseXOR(lit(1 << b)) + lit(t << bits))): _*)
-    // score IN-BUCKET, narrow and codegen'd, BEFORE the pair dedup: a
-    // pair found by several probes/tables scores identically each time,
-    // so max() dedups it and the (query, neighbor) shuffle carries 8
-    // bytes of cosine instead of two 64-dim vectors — the first draft
-    // shuffled first(v)/first(qv) per candidate and went quadratic in
-    // shuffle BYTES (×10 probe: 241 s, ×26: out of disk); this form
-    // re-scores duplicate candidates (cheap in-row math) to keep the
-    // one wide-payload stage out of the plan entirely
-    val cand = Seq(("b0", 0), ("b1", 1)).map { case (bc, t) =>
-      val corpus = all.select(col("vec_id"), col("v"), col("nrm"),
-        (col(bc) + lit(t << bits)).as("bucket"))
-      val q = all.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), explode(probeCol(bc, t)).as("bucket"))
-      corpus.join(q.hint("shuffle_hash"), Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(VectorOps.cosine(col("v"), col("qv"), col("nrm"), col("qn")), 6)
-            .as("cosine"))
-    }.reduce(_ unionByName _)
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cosine")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val res = cand
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= KnnK)
-      .select(col("query_id").as("vec_id"), col("rank"),
-        col("neighbor_id"), col("cosine"))
-      .orderBy(col("vec_id"), col("rank"))
-    (res, all)
-  }
-
-  /** kNN graph → τ-edges → connected components, width-parameterized —
-    * shared by sim_semantic_clusters (fixture 8-bit index) and
-    * sim_semantic_clusters_scaled (bits = KnnScaledBits, the log2-n
-    * production width). The cluster stage is identical either way: the
-    * bits parameter only changes which kNN build feeds it — and with it
-    * whether candidate volume stays ~n·k as the corpus grows.
-    */
-  private[queries] def semanticClusters(s: SparkSession, dir: String,
-      bits: Int = NBits): DataFrame =
-    clusterStage(s, dir, knnGraph(s, dir, bits))
-
   /** τ-edges → shared CC → singleton fill over ANY materialized kNN
     * graph (vec_id, rank, neighbor_id, cosine) — the stage every
     * sim_semantic_clusters variant shares; only the kNN build feeding
@@ -446,7 +321,7 @@ object Round13Queries {
       .filter(col("cosine") >= SemClusterTau)
       .select(col("vec_id"), col("neighbor_id"))
     val labels = graft.operators.ConnectedComponents.run(knn)
-    val all = vectors(s, dir).select(col("vec_id"))
+    val all = Embeddings.load(s, dir).select(col("vec_id"))
     val wc = Window.partitionBy(col("cluster_id"))
     all
       .join(labels.withColumnRenamed("node", "vec_id"), Seq("vec_id"), "left")
@@ -490,63 +365,6 @@ object Round13Queries {
         greatest(query_id, neighbor_id) AS vec_b,
         max(cosine) AS cosine
       FROM knn GROUP BY 1, 2 ORDER BY 1, 2"""
-
-  /** The τ-edge oracle at a given signature width. */
-  private[queries] def tauEdgesSql(bits: Int = NBits): String =
-    tauEdgesSqlOver(knnDuckCtes(bits))
-
-  /** The full kNN-graph oracle statement at `bits` as a named builder —
-    * the declared rows (fixture and scaled) AND the round-19 recall
-    * audit nest this IDENTICAL statement (one definition, no drift).
-    */
-  private[graft] def knnGraphDuckSql(bits: Int = NBits): String =
-    s"""WITH ${knnDuckCtes(bits)}
-      SELECT query_id AS vec_id, rank, neighbor_id, cosine FROM ranked
-      WHERE rank <= $KnnK ORDER BY vec_id, rank"""
-
-  /** The kNN-graph oracle CTE chain, ending in `ranked` (query_id,
-    * neighbor_id, cosine, rank) — shared by both consumers.
-    */
-  private def knnDuckCtes(bits: Int = NBits): String = {
-    val tables = knnTables(bits)
-    def bucketSql(t: Int) = (0 until bits).map { b =>
-      val lits = tables(t)(b).mkString("[", ", ", "]")
-      s"(CASE WHEN ${VectorOps.duckDot("v", lits)} >= 0.0 THEN ${1 << b} ELSE 0 END)"
-    }.mkString(" + ")
-    def probes(t: Int) = (0 to bits).map {
-      case 0 => s"b$t + ${t << bits}"
-      case b => s"xor(b$t, ${1 << (b - 1)}) + ${t << bits}"
-    }.mkString("[", ", ", "]")
-    s"""$vectorsDuck,
-      bucketed AS (
-        SELECT vec_id, v, nrm, ${bucketSql(0)} AS b0, ${bucketSql(1)} AS b1
-        FROM nvecs),
-      corpus AS (
-        SELECT vec_id, v, nrm, b0 AS bucket FROM bucketed
-        UNION ALL
-        SELECT vec_id, v, nrm, b1 + ${1 << bits} AS bucket FROM bucketed),
-      q AS (
-        SELECT vec_id AS query_id, unnest(${probes(0)}) AS bucket
-        FROM bucketed
-        UNION ALL
-        SELECT vec_id AS query_id, unnest(${probes(1)}) AS bucket
-        FROM bucketed),
-      cand AS (
-        SELECT DISTINCT q.query_id, a.vec_id AS neighbor_id
-        FROM corpus a JOIN q ON a.bucket = q.bucket
-          AND a.vec_id <> q.query_id),
-      sims AS (
-        SELECT c.query_id, c.neighbor_id,
-          round(${VectorOps.duckDot("a.v", "b.v")} / (a.nrm * b.nrm), 6) AS cosine
-        FROM cand c
-        JOIN nvecs b ON b.vec_id = c.query_id
-        JOIN nvecs a ON a.vec_id = c.neighbor_id),
-      ranked AS (
-        SELECT query_id, neighbor_id, cosine,
-          row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-        FROM sims)"""
-  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -897,46 +715,6 @@ object Round13Queries {
         "QI cells with user_id as the sensitive attribute, plus the " +
         "dominant-user share; two stacked rollups, output QI-bounded."),
 
-    // ── sign-LSH kNN graph ───────────────────────────────────────────
-    // The build step for graph-based ANN serving and embedding-space
-    // corpus analyses: EVERY vector retrieves its top-k cosine
-    // neighbors among multiprobe bucket-mates (own bucket + NBits
-    // Hamming-1 flips, over TWO independent hash tables — the
-    // sim_lsh_topk recipe with the whole corpus as the query side and
-    // the union-of-tables recall amplifier from dedup_embedding_ann).
-    // Candidate volume is Σ bucket-load² per table, pruned by the
-    // index — never the all-pairs n²; at growing corpus scale the
-    // width-scaled bits~log2(n) rule (dedup_embedding_ann_scaled) keeps
-    // per-bucket load constant. The probe side explodes (1+NBits)
-    // bucket keys per vector per table — a constant fan-out, shuffled
-    // on the bucket key; a pair found by several probes/tables is
-    // deduped BEFORE the one exact verify.
-    QueryDef(
-      "sim_knn_graph",
-      (s, dir) => knnGraph(s, dir),
-      Some(knnGraphDuckSql()),
-      doc = s"Sign-LSH kNN graph (k=$KnnK): every vector's top-k cosine " +
-        "neighbors among multiprobe bucket-mates across TWO independent " +
-        "hash tables (pair-level distinct, exact verify once); candidate " +
-        "volume is sum of bucket-load^2 per table, never all-pairs; " +
-        "width-scaled bits rule applies at growing corpus scale."),
-
-    // ── width-scaled kNN graph twin (bits ~ log2 n) ──────────────────
-    // The production setting of V11 for larger corpora: candidates grow
-    // as n²/2^bits per table, so the 8-bit index that is right for the
-    // fixture goes quadratic on probe corpora (×10: 16.7 s, ×26:
-    // 133 s) — at 2^12 buckets the per-bucket load (and with it probe
-    // cost) drops ~16×. Same recipe, same oracle builder, wider
-    // signature — exactly the dedup_embedding_ann_scaled discipline.
-    QueryDef(
-      "sim_knn_graph_scaled",
-      (s, dir) => knnGraph(s, dir, KnnScaledBits),
-      Some(knnGraphDuckSql(KnnScaledBits)),
-      doc = s"Width-scaled kNN graph (bits=$KnnScaledBits ~ log2 of the " +
-        "probe corpora): same two-table multiprobe recipe with a wider " +
-        "signature — per-bucket load, hence candidate volume, stays " +
-        "constant as the corpus grows."),
-
     // ── modularity of the LPA partition (Newman & Girvan 2004) ───────
     // The quality score of a community partition: Q = Σ_c [e_c/E −
     // (K_c/E)²] with E the directed (symmetric-list) edge count, e_c
@@ -964,7 +742,7 @@ object Round13Queries {
     // keep-one).
     QueryDef(
       "sim_semantic_clusters",
-      (s, dir) => semanticClusters(s, dir),
+      (s, dir) => clusterStage(s, dir, KnnGraph.build(s, dir, Lsh(NBits))),
       None,
       doc = s"Semantic clusters: kNN-graph edges at cosine >= $SemClusterTau " +
         "resolved with the shared CC operator (min-label), singleton " +
@@ -985,8 +763,8 @@ object Round13Queries {
     // variant alone; the closure is replayed by the spec union-find).
     QueryDef(
       "sim_semantic_edges",
-      (s, dir) => tauEdges(knnGraph(s, dir)),
-      Some(tauEdgesSql()),
+      (s, dir) => tauEdges(KnnGraph.build(s, dir, Lsh(NBits))),
+      Some(tauEdgesSqlOver(KnnGraph.duckCtes(Lsh(NBits)))),
       doc = s"Canonical undirected tau-edges (cosine >= $SemClusterTau) of " +
         "the fixture-width kNN graph — the exact CC input of " +
         "sim_semantic_clusters as (least, greatest) pairs; hash-green " +

@@ -28,6 +28,8 @@ import graft.Tables
   */
 object Round13bQueries {
 
+  import Hash60.{h60Duck, h60Spark}
+
   import SimilarityQueries.{CentroidEvery, CentroidCap, NProbe}
   import Round11Queries.{PqM, PqSubDim, PqK, PqCentEvery, PqShortlist, PqTopK, PqNQueries}
 
@@ -43,20 +45,6 @@ object Round13bQueries {
 
   /** Bootstrap replicate count. */
   val BootB = 100
-
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
-
-  private val vectorsDuck =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings)"""
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   private[queries] val nodeStr =
     "IF(node % 2 = 0, concat('c', node div 2), concat('s', node div 2))"
@@ -95,7 +83,7 @@ object Round13bQueries {
 
   /** The IVFPQ oracle as a named val — the round-18 contract recall row nests this IDENTICAL statement (one definition, no drift). */
   private[queries] lazy val ivfpqTopkDuckSql: String =
-    s"""WITH $vectorsDuck,
+    s"""WITH ${Embeddings.duck},
           cents AS (
             SELECT vec_id AS cent_id, v AS cv FROM vecs
             WHERE vec_id % $CentroidEvery = 0
@@ -190,7 +178,7 @@ object Round13bQueries {
       "sim_ivfpq_topk",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
-        val all = vectors(s, dir)
+        val all = Embeddings.load(s, dir)
         // coarse cells (sim_ivf_topk recipe, assignment only)
         val cents = all.filter(col("vec_id") % CentroidEvery === 0 &&
             col("vec_id") < CentroidEvery * CentroidCap)

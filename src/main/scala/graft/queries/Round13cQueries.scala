@@ -31,12 +31,6 @@ object Round13cQueries {
   /** Queries = the first HnQueries vec_ids (the sim-family stance). */
   val HnQueries = 5
 
-  private def vectors(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"),
-        col("label"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
-
   private val vectorsDuck =
     """vecs AS (
          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
@@ -168,7 +162,7 @@ object Round13cQueries {
     QueryDef(
       "sim_hard_negatives",
       (s, dir) => {
-        val all = vectors(s, dir)
+        val all = Embeddings.normed(s, dir, "label")
         val q = all.filter(col("vec_id") < HnQueries)
           .select(col("vec_id").as("query_id"), col("v").as("qv"),
             col("nrm").as("qn"), col("label").as("qlabel"))

@@ -6,7 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.QuantileSketchAgg
+import graft.operators.{QuantileSketchAgg, Staged}
+import vector.KnnGraph
+import vector.KnnGraph.Cells.Lsh
 
 /** Round-15 batch: the promised production twins —
   *
@@ -39,6 +41,8 @@ import graft.operators.QuantileSketchAgg
   */
 object Round15Queries {
 
+  import Hash60.{h60Duck, h60Spark}
+
   /** Per-supplier degree cap H: capped wedge work is ≤ H²/2 per
     * supplier whatever the hub degree. 64 binds on every fixture
     * (supplier degrees are 139–679 across sf0.001–sf0.1), so the cap
@@ -54,11 +58,6 @@ object Round15Queries {
     * correctness gate checks.
     */
   val SketchK = 64
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   /** DISTINCT (customer, supplier) bipartite edge set — the
     * graph_butterflies input (Round13cQueries.scala:122).
@@ -126,8 +125,7 @@ object Round15Queries {
       "graph_butterflies_capped",
       (s, dir) => {
         val (res, capped, cs) = cappedButterflies(s, dir)
-        try res.localCheckpoint(true)
-        finally { capped.unpersist(false); cs.unpersist(false) }
+        Staged(res, Seq(capped, cs)).materialize()
       },
       Some(s"""WITH cs AS (
           SELECT DISTINCT o_custkey AS c, l_suppkey AS sp
@@ -209,11 +207,11 @@ object Round15Queries {
     // fill) is identical; only the index width changes.
     QueryDef(
       "sim_semantic_clusters_scaled",
-      (s, dir) => Round13Queries.semanticClusters(
-        s, dir, Round13Queries.KnnScaledBits),
+      (s, dir) => Round13Queries.clusterStage(s, dir,
+        KnnGraph.build(s, dir, Lsh(KnnGraph.KnnScaledBits))),
       None,
       doc = s"Semantic clusters over the width-scaled kNN graph " +
-        s"(bits=${Round13Queries.KnnScaledBits} ~ log2 n): candidate " +
+        s"(bits=${KnnGraph.KnnScaledBits} ~ log2 n): candidate " +
         "volume stays ~n·k as the corpus grows; same τ-edge + shared-CC " +
         "cluster stage as sim_semantic_clusters. Oracle split (SURVEY " +
         "§5 note 14): rows-only here; sim_semantic_edges_scaled is the " +
@@ -228,10 +226,11 @@ object Round15Queries {
     QueryDef(
       "sim_semantic_edges_scaled",
       (s, dir) => Round13Queries.tauEdges(
-        Round13Queries.knnGraph(s, dir, Round13Queries.KnnScaledBits)),
-      Some(Round13Queries.tauEdgesSql(Round13Queries.KnnScaledBits)),
+        KnnGraph.build(s, dir, Lsh(KnnGraph.KnnScaledBits))),
+      Some(Round13Queries.tauEdgesSqlOver(
+        KnnGraph.duckCtes(Lsh(KnnGraph.KnnScaledBits)))),
       doc = s"Canonical undirected tau-edges of the width-scaled " +
-        s"(bits=${Round13Queries.KnnScaledBits}) kNN graph — the exact " +
+        s"(bits=${KnnGraph.KnnScaledBits}) kNN graph — the exact " +
         "CC input of sim_semantic_clusters_scaled; hash-green " +
         "replacement for the retired recursive-closure oracle."),
 
@@ -256,7 +255,6 @@ object Round15Queries {
         // persist it executes twice; released after materialization
         // like the other two-consumer stages in this file
         val scored = Round12Queries.ccnetScored(s, dir).persist()
-        try {
         val cuts = scored
           .withColumn("tag",
             expr(h60Spark("concat('qsk:', cast(doc_id as string))")))
@@ -265,16 +263,14 @@ object Round15Queries {
           .select(col("lang"),
             expr("element_at(samp, cast(ceil(size(samp) / 3.0) as int))").as("c1"),
             expr("element_at(samp, cast(ceil(2 * size(samp) / 3.0) as int))").as("c2"))
-        scored.join(broadcast(cuts), Seq("lang"))
+        Staged(scored.join(broadcast(cuts), Seq("lang"))
           .withColumn("ppl_bucket", expr(
             """CASE WHEN avg_surprisal <= c1 THEN 'head'
                     WHEN avg_surprisal <= c2 THEN 'middle'
                     ELSE 'tail' END"""))
           .select(col("doc_id"), col("lang"), col("avg_surprisal"),
             col("ppl_bucket"))
-          .orderBy(col("doc_id"))
-          .localCheckpoint(true)
-        } finally scored.unpersist(false)
+          .orderBy(col("doc_id")), Seq(scored)).materialize()
       },
       Some(s"""WITH ${Round12Queries.ccnetScoredDuck},
         tagged AS (

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
-import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
+import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg, Staged}
 
 /** Round-15b batch: batch operators a corpus-scale pipeline leans on
   * that the inventory still lacked —
@@ -91,6 +91,8 @@ import graft.operators.{AmsSketchAgg, CmSketchAgg, KmvDistinctAgg}
   */
 object Round15bQueries {
 
+  import Hash60.{h60Duck, h60Spark}
+
   /** Sample size per stratum (language). 32 binds on every fixture SF
     * (64–218 docs per language at sf0.001–0.01), so the threshold /
     * estimator path — not the degenerate take-everything path — is what
@@ -122,11 +124,6 @@ object Round15bQueries {
     * the exact path, which the spec pins separately.)
     */
   val KmvK = 64
-
-  private def h60Spark(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def h60Duck(e: String): String =
-    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
 
   /** Shared oracle for graph_triangles and its partitioned twin — the
     * orientation is a pure per-edge function, so both join strategies
@@ -417,8 +414,7 @@ object Round15bQueries {
       "graph_triangles",
       (s, dir) => {
         val (res, o) = trianglesPlan(s, dir)
-        try res.localCheckpoint(true)
-        finally graft.operators.Layouts.releaseCheckpoint(o)
+        Staged(res, Seq(o)).materialize()
       },
       Some(trianglesSql),
       doc = "Degree-ordered triangle counting (Schank-Wagner / " +
@@ -440,8 +436,7 @@ object Round15bQueries {
       "graph_triangles_partitioned",
       (s, dir) => {
         val (res, o) = trianglesPlan(s, dir, bcast = false)
-        try res.localCheckpoint(true)
-        finally graft.operators.Layouts.releaseCheckpoint(o)
+        Staged(res, Seq(o)).materialize()
       },
       Some(trianglesSql),
       doc = "graph_triangles for part catalogues beyond the broadcast " +
@@ -825,8 +820,7 @@ object Round15bQueries {
       "graph_clustering_coeff",
       (s, dir) => {
         val (res, stages) = lccPlan(s, dir)
-        try res.localCheckpoint(true)
-        finally stages.foreach(graft.operators.Layouts.releaseCheckpoint)
+        Staged(res, stages).materialize()
       },
       Some("""WITH sos AS (
           SELECT DISTINCT l_orderkey AS ord, l_partkey AS sp FROM lineitem),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.operators.Staged
 
 /** Round-17 batch rows:
   *
@@ -26,6 +26,8 @@ import graft.Tables
   * like SURVEY §2.7.
   */
 object Round17Queries {
+
+  import Hash60.{idHash60Duck, idHash60Spark}
 
   /** IVF auto-width bounds: K = clamp(⌈√n⌉, min, max) — the FAISS
     * K ~ √n sizing rule with a floor that keeps tiny fixtures
@@ -98,15 +100,6 @@ object Round17Queries {
             CAST(ceil(sqrt(count(*))) AS BIGINT))) AS INT) AS kk
         FROM $src)"""
 
-  /** Engine-portable 60-bit id hash (md5 of the decimal string, first
-    * 15 hex chars) — the Round15b h60 recipe over a BIGINT id; shared
-    * by the hash-residue centroid sample and its DuckDB replay.
-    */
-  private[graft] def idHash60Spark(idCol: String): String =
-    s"cast(conv(substring(md5(cast($idCol as string)), 1, 15), 16, 10) as bigint)"
-  private[graft] def idHash60Duck(idCol: String): String =
-    s"CAST(('0x' || substring(md5(CAST($idCol AS VARCHAR)), 1, 15)) AS BIGINT)"
-
   /** Count-derived IVF serving over a caller-prepared (and persisted)
     * (vec_id, v, nrm) corpus — the recall audit threads ONE shared
     * persisted corpus through every index builder (round-17 advice);
@@ -148,7 +141,7 @@ object Round17Queries {
   private[graft] def ivfTopkAutoPlan(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val corpus = SimilarityQueries.vectors(s, dir)
+    val corpus = Embeddings.normed(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     (ivfTopkAutoServe(corpus), corpus)
@@ -159,7 +152,7 @@ object Round17Queries {
     */
   private[queries] val ivfTopkAutoDuckSql: String =
     SimilarityQueries.ivfServeDuckSql(
-      s"""${SimilarityQueries.vectorsDuck},
+      s"""${Embeddings.normedDuck},
         width AS (${ivfAutoWidthSql("nvecs", IvfAutoMaxK)}),
         cents AS (
           SELECT vec_id AS cent_id, v AS cv
@@ -181,8 +174,7 @@ object Round17Queries {
       "st_incremental_ann",
       (s, dir) => {
         val (out, stages) = annIncrementalPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally stages.foreach(_.unpersist(false))
+        Staged(out, stages).materialize()
       },
       Some(DedupQueries.annIncrementalDuckSql),
       doc = "ST27 batch twin: per vector the smallest earlier sign-LSH " +
@@ -204,8 +196,7 @@ object Round17Queries {
       "sim_ivf_topk_auto",
       (s, dir) => {
         val (out, all) = ivfTopkAutoPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally all.unpersist(false)
+        Staged(out, Seq(all)).materialize()
       },
       Some(ivfTopkAutoDuckSql),
       doc = "IVF top-k with K = clamp(ceil(sqrt(n)), 4, 4096) and " +
@@ -230,16 +221,15 @@ object Round17Queries {
       (s, dir) => {
         import Round11cQueries.{IvfNQueries, IvfTopK}
         graft.functions.GraftFunctions.register(s)
-        val width = ivfAutoWidth(Round11bQueries.vectors(s, dir),
+        val width = ivfAutoWidth(Embeddings.load(s, dir),
           IvfKmeansAutoMaxK)
         // persisted: the width crossJoin feeds c0, every Lloyd round's
         // assignment, the cell-posting pass AND the query probes — each
         // would otherwise re-run the corpus count (review finding; the
         // plan/stages pattern of ivfTopkAutoPlan)
-        val vecs = Round11bQueries.vectors(s, dir)
+        val vecs = Embeddings.load(s, dir)
           .crossJoin(broadcast(width))
           .persist()
-        try {
         // init = the hash-residue sample (~kk seeds whatever the id
         // layout — the round-19 V2b cell-collapse fix applied to the
         // init rule too: `vec_id < kk` is EMPTY on a corpus whose ids
@@ -269,7 +259,7 @@ object Round17Queries {
                     x -> x.pos)""")).as("probe"))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("cosine").desc, col("neighbor_id").asc)
-        codes
+        Staged(codes
           .join(broadcast(qprobes), col("cluster") === col("probe"))
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -279,9 +269,7 @@ object Round17Queries {
           .filter(col("rank") <= IvfTopK)
           .select(col("query_id"), col("rank"), col("neighbor_id"),
             col("cosine"))
-          .orderBy(col("query_id"), col("rank"))
-          .localCheckpoint(true)
-        } finally vecs.unpersist(false)
+          .orderBy(col("query_id"), col("rank")), Seq(vecs)).materialize()
       },
       Some(ivfKmeansTopkAutoDuckSql),
       doc = "Lloyd-trained IVF (FAISS IndexIVFFlat recipe) at K = " +

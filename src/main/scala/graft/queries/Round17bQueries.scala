@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType}
 
 import graft.Tables
+import graft.operators.Staged
 
 /** Round-17b rows — the two capability gaps left after the round-17
   * close:
@@ -61,7 +62,7 @@ object Round17bQueries {
       s: org.apache.spark.sql.SparkSession, dir: String,
       eagerTruth: Boolean = true): (DataFrame, Seq[DataFrame]) = {
     import SimilarityQueries._
-    val all = vectors(s, dir)
+    val all = Embeddings.normed(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     val truthRaw = bruteTopk(all, IvfTopK)
@@ -113,8 +114,7 @@ object Round17bQueries {
       "sim_index_recall",
       (s, dir) => {
         val (out, stages) = indexRecallPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally stages.foreach(graft.operators.Layouts.releaseCheckpoint)
+        Staged(out, stages).materialize()
       },
       Some {
         import SimilarityQueries.IvfTopK
@@ -312,8 +312,7 @@ object Round17bQueries {
       (s, dir) => {
         val (pairs, v, sigs) = Round16Queries.annAutoPairs(
           s, dir, gridHotLoad = graft.operators.Salting.DeriveHotLoad)
-        try pairs.localCheckpoint(true)
-        finally { sigs.unpersist(false); v.unpersist(false) }
+        Staged(pairs, Seq(sigs, v)).materialize()
       },
       Some(Round16Queries.annAutoDuckSql),
       doc = "dedup_embedding_ann_auto with the two-sided hot-bucket " +

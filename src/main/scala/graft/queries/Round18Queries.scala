@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Staged
 
 /** Round-18 rows — the round-17 verdict's asks, closed:
   *
@@ -115,7 +116,7 @@ object Round18Queries {
   private[graft] def lshTopkAutoPlan(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
-    val corpus = SimilarityQueries.vectors(s, dir)
+    val corpus = Embeddings.normed(s, dir)
       .transform(graft.operators.Layouts.spread)
       .persist()
     (lshTopkAutoServe(corpus), Seq(corpus))
@@ -147,7 +148,7 @@ object Round18Queries {
             unnest(${probesSql(t)}) AS bucket
           FROM sigs WHERE vec_id < $NQueries""")
       .mkString("\n        UNION ALL\n        ")
-    s"""WITH ${SimilarityQueries.vectorsDuck},
+    s"""WITH ${Embeddings.normedDuck},
       width AS (
         SELECT $bitsSql AS bits,
           (CAST(1 AS BIGINT) << $bitsSql) - 1 AS mask FROM vecs),
@@ -186,7 +187,7 @@ object Round18Queries {
       dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import Round11Queries.{PqNQueries, PqTopK}
-    val all = SimilarityQueries.vectors(s, dir)
+    val all = Embeddings.normed(s, dir)
     val q = all.filter(col("vec_id") < PqNQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val w = Window.partitionBy(col("query_id"))
@@ -204,7 +205,7 @@ object Round18Queries {
     */
   private def bruteL2DuckSql: String = {
     import Round11Queries.{PqNQueries, PqTopK}
-    s"""WITH ${SimilarityQueries.vectorsDuck},
+    s"""WITH ${Embeddings.normedDuck},
       q AS (SELECT vec_id AS query_id, v AS qv FROM vecs
             WHERE vec_id < $PqNQueries),
       d AS (
@@ -252,8 +253,7 @@ object Round18Queries {
       "st_incremental_ann_auto",
       (s, dir) => {
         val (pairs, v, sigs) = Round16Queries.annAutoPairs(s, dir)
-        try Round17Queries.annVerdict(pairs, v).localCheckpoint(true)
-        finally { sigs.unpersist(false); v.unpersist(false) }
+        Staged(Round17Queries.annVerdict(pairs, v), Seq(sigs, v)).materialize()
       },
       Some(DedupQueries.annVerdictDuckSqlOver(Round16Queries.annAutoDuckSql)),
       doc = "ST27 batch twin at the scale-safe substrate: per vector " +
@@ -294,8 +294,7 @@ object Round18Queries {
       "sim_lsh_topk_auto",
       (s, dir) => {
         val (out, stages) = lshTopkAutoPlan(s, dir)
-        try out.localCheckpoint(true)
-        finally stages.foreach(_.unpersist(false))
+        Staged(out, stages).materialize()
       },
       Some(lshTopkAutoDuckSql),
       doc = s"Auto-width serving sign-LSH top-k: $LshAutoTables " +

@@ -55,3 +55,21 @@ object VectorOps {
   def duckDist2(a: String, b: String): String =
     duckFoldSum(s"list_transform(range(len($a)), k -> ($a[k+1] - $b[k+1]) * ($a[k+1] - $b[k+1]))")
 }
+
+/** Engine-portable 60-bit hash: md5 of a string expression, first 15 hex
+  * chars as a BIGINT — bit-identical in Spark SQL and DuckDB, so hash
+  * residues (sampling, bucketing, seeded noise) replay exactly in the
+  * oracle.
+  */
+object Hash60 {
+  def h60Spark(e: String): String =
+    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
+  def h60Duck(e: String): String =
+    s"CAST(('0x' || substring(md5($e), 1, 15)) AS BIGINT)"
+
+  /** `h60` of a BIGINT id's decimal string — the hash-residue centroid
+    * sample and its DuckDB replay.
+    */
+  def idHash60Spark(idCol: String): String = h60Spark(s"cast($idCol as string)")
+  def idHash60Duck(idCol: String): String = h60Duck(s"CAST($idCol AS VARCHAR)")
+}

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.queries.{QueryDef, Round13Queries}
+import graft.queries.vector.KnnGraph
 
 /** Round-13 operator invariants:
   *
@@ -29,7 +30,7 @@ import graft.queries.{QueryDef, Round13Queries}
 class Round13Spec extends SparkSpec {
 
   private def q(name: String) =
-    QueryDef.toQueriesMap(Round13Queries.defs)(name)
+    QueryDef.toQueriesMap(Round13Queries.defs ++ KnnGraph.defs)(name)
 
   // ── label propagation ──────────────────────────────────────────────
 

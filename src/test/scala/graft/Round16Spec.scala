@@ -135,7 +135,7 @@ class Round16Spec extends SparkSpec {
       "fixture too small — the derived width never leaves the floor")
     val mask = (1 << bits) - 1
     // sequential-fold dot (the DotProduct expression's order), exactly
-    val tables = Round13Queries.knnTables(Round16Queries.KnnAutoMaxBits)
+    val tables = graft.queries.vector.KnnGraph.knnTables(Round16Queries.KnnAutoMaxBits)
     def dot(a: Array[Double], b: Seq[Double]): Double = {
       var acc = 0.0; var k = 0
       while (k < a.length) { acc += a(k) * b(k); k += 1 }

@@ -42,7 +42,7 @@ class Round19Spec extends SparkSpec {
 
   /** The engine-portable h60 id hash (md5 of the decimal string, first
     * 15 hex chars) — independent Scala replay of
-    * Round17Queries.idHash60Spark.
+    * Hash60.idHash60Spark.
     */
   private def h60(id: Long): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
@@ -71,7 +71,7 @@ class Round19Spec extends SparkSpec {
         .sortBy(identity).map(_._2)
     val home = vecs.map { case (id, v) => id -> ranked(v).head }.toMap
     val probes = vecs.map { case (id, v) =>
-      id -> ranked(v).take(graft.queries.Round19Queries.KnnIvfNprobe).toSet
+      id -> ranked(v).take(graft.queries.vector.KnnGraph.KnnIvfNprobe).toSet
     }.toMap
     vecs.map { case (qid, qv) =>
       val cand = vecs.filter { case (nid, _) =>
@@ -103,7 +103,7 @@ class Round19Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_recall: arithmetic replays from an independent truth and the declared builds") {
-    import graft.queries.Round19Queries.KnnRecallPanel
+    import graft.queries.vector.KnnGraph.KnnRecallPanel
     import graft.queries.Round13Queries.KnnK
     // independent truth: brute top-k per panel query
     val truth: Map[Long, Set[Long]] = vecs.take(KnnRecallPanel).map {

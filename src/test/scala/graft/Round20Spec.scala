@@ -2,6 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Staged
+import graft.queries.Embeddings
+import graft.queries.vector.KnnGraph
+import graft.queries.vector.KnnGraph.Cells.{IvfCoarse, IvfHier}
+
 /** Round-20 rows: the bounded-load IVF-cell kNN graph (V24), the
   * NN-Descent refinement (V25), and the re-based production semantic
   * clusters (V12g/V12h).
@@ -18,10 +23,9 @@ class Round20Spec extends SparkSpec {
   private def run(name: String) = SparkEntry.queries(name)(spark, sf())
 
   test("cellLoadWidth: count grows with n, load stays ~constant") {
-    import graft.queries.Round20Queries
-    val E = Round20Queries.KnnCellLoad
+    val E = KnnGraph.KnnCellLoad
     Seq(20L, 500L, 50000L, 5000000L).foreach { n =>
-      val w = Round20Queries
+      val w = KnnGraph
         .cellLoadWidth(spark.range(n).toDF("vec_id"))
         .head
       val (fk, ck, fstride, cstride) =
@@ -38,8 +42,8 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_ivf_scaled: bounded load measured on the fixture") {
-    import graft.queries.{Round13Queries, Round20Queries}
-    val (res, stages) = Round20Queries.knnGraphIvfScaledPlan(spark, sf())
+    import graft.queries.Round13Queries
+    val Staged(res, stages) = KnnGraph.plan(Embeddings.normed(spark, sf()), IvfCoarse)
     try {
       val out = res.collect()
       assert(out.nonEmpty, "fixture graph must be non-empty")
@@ -54,12 +58,12 @@ class Round20Spec extends SparkSpec {
           max(col("load")).as("mx"), count(lit(1)).as("ncells"))
         .head
       val n = cells.count()
-      val expectedCells = n.toDouble / Round20Queries.KnnCellLoad
+      val expectedCells = n.toDouble / KnnGraph.KnnCellLoad
       assert(loads.getLong(2) > expectedCells / 2,
         s"cell count ${loads.getLong(2)} must track n/load ~ $expectedCells")
-      assert(loads.getDouble(0) <= 8.0 * Round20Queries.KnnCellLoad,
+      assert(loads.getDouble(0) <= 8.0 * KnnGraph.KnnCellLoad,
         s"p99 home load ${loads.getDouble(0)} must stay near the " +
-          s"declared constant ${Round20Queries.KnnCellLoad}")
+          s"declared constant ${KnnGraph.KnnCellLoad}")
       // rank contiguity at the declared k
       out.groupBy(_.getLong(0)).values.foreach { rows =>
         val ranks = rows.map(_.getInt(1)).sorted
@@ -71,26 +75,25 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_nnd: each round only improves the k-NN lists") {
-    import graft.queries.{Round13Queries, Round20Queries}
+    import graft.queries.Round13Queries
     // NN-Descent's defining invariant: round r's candidate set is a
     // SUPERSET of round r-1's edges, so after re-ranking, every
     // query's list is pointwise at-least-as-good (cosine at each rank
     // non-decreasing, lists only grow). A regression in the candidate
     // union or the re-rank breaks this before any oracle runs.
-    import graft.queries.{Round19Queries, Round20Queries}
-    val stages = Round20Queries.trainedCoarseCellsFrom(
+    val stages = KnnGraph.cellStage(
       graft.Tables.load(spark, sf(), "embeddings")
         .select(col("vec_id"),
           graft.queries.VectorOps.toDouble(col("embedding")).as("v"))
-        .withColumn("nrm", graft.queries.VectorOps.norm(col("v"))))
+        .withColumn("nrm", graft.queries.VectorOps.norm(col("v"))), IvfCoarse)
     locally {
-      val g0 = Round19Queries
-        .cellGraphServe(stages.head, Round20Queries.KnnNndWidth)
+      val g0 = KnnGraph
+        .cellGraphServe(stages.head, KnnGraph.KnnNndWidth)
         .localCheckpoint(true)
       try {
         val corpus = stages.last
-        val g1 = Round20Queries.nndRound(corpus, g0)
-        val g2 = Round20Queries.nndRound(corpus, g1)
+        val g1 = KnnGraph.nndRound(corpus, g0)
+        val g2 = KnnGraph.nndRound(corpus, g1)
         def lists(df: org.apache.spark.sql.DataFrame)
             : Map[Long, Seq[Double]] =
           df.collect().groupBy(_.getLong(0)).view
@@ -151,7 +154,6 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_ivf_hier at ZERO fine rounds is exactly the bounded-load build") {
-    import graft.queries.Round20Queries
     // the scaffold pin: the hierarchical stage's fine INIT is V24's
     // residue sample homed to its coarse cell, and its (c2, f) identity
     // ranks fine cells by sampled vec_id within each coarse cell —
@@ -167,9 +169,9 @@ class Round20Spec extends SparkSpec {
       .select(col("vec_id"),
         graft.queries.VectorOps.toDouble(col("embedding")).as("v"))
       .withColumn("nrm", graft.queries.VectorOps.norm(col("v")))
-    val (h0, hs) = Round20Queries.knnGraphIvfHierPlanFrom(base, fineIters = 0)
+    val Staged(h0, hs) = KnnGraph.plan(base, IvfHier(fineIters = 0))
     val hierEdges = try edges(h0) finally hs.foreach(_.unpersist(false))
-    val (v24, vs) = Round20Queries.knnGraphIvfScaledPlan(spark, sf())
+    val Staged(v24, vs) = KnnGraph.plan(Embeddings.normed(spark, sf()), IvfCoarse)
     val scaledEdges = try edges(v24) finally vs.foreach(_.unpersist(false))
     assert(hierEdges.nonEmpty, "fixture graph must be non-empty")
     assert(hierEdges == scaledEdges,
@@ -177,8 +179,8 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_ivf_hier: trained fine level keeps the load discipline") {
-    import graft.queries.{Round13Queries, Round20Queries}
-    val (res, stages) = Round20Queries.knnGraphIvfHierPlan(spark, sf())
+    import graft.queries.Round13Queries
+    val Staged(res, stages) = KnnGraph.plan(Embeddings.normed(spark, sf()), IvfHier())
     try {
       val out = res.collect()
       assert(out.nonEmpty, "fixture graph must be non-empty")
@@ -193,12 +195,12 @@ class Round20Spec extends SparkSpec {
           count(lit(1)).as("ncells"))
         .head
       val n = cells.count()
-      val expectedCells = n.toDouble / Round20Queries.KnnCellLoad
+      val expectedCells = n.toDouble / KnnGraph.KnnCellLoad
       assert(loads.getLong(1) > expectedCells / 2,
         s"cell count ${loads.getLong(1)} must track n/load ~ $expectedCells")
-      assert(loads.getDouble(0) <= 8.0 * Round20Queries.KnnCellLoad,
+      assert(loads.getDouble(0) <= 8.0 * KnnGraph.KnnCellLoad,
         s"p99 home load ${loads.getDouble(0)} must stay near the " +
-          s"declared constant ${Round20Queries.KnnCellLoad}")
+          s"declared constant ${KnnGraph.KnnCellLoad}")
       // fine training must actually move the fine-level ASSIGNMENTS off
       // the init tiling (a no-op Lloyd round would silently degrade the
       // declared row back to V24). Edge-level gain is a probe-scale
@@ -210,7 +212,7 @@ class Round20Spec extends SparkSpec {
         .select(col("vec_id"),
           graft.queries.VectorOps.toDouble(col("embedding")).as("v"))
         .withColumn("nrm", graft.queries.VectorOps.norm(col("v")))
-      val zs = Round20Queries.hierCellsFrom(base, fineIters = 0)
+      val zs = KnnGraph.cellStage(base, IvfHier(fineIters = 0))
       val zeroCells = try zs.head.select(col("vec_id"), col("cells"))
           .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
         finally zs.foreach(_.unpersist(false))
@@ -229,19 +231,19 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_nnd_hier is seed + KnnNndRounds unrolled rounds") {
-    import graft.queries.{Round13Queries, Round19Queries, Round20Queries}
-    val stages = Round20Queries.hierCellsFrom(
+    import graft.queries.Round13Queries
+    val stages = KnnGraph.cellStage(
       graft.Tables.load(spark, sf(), "embeddings")
         .select(col("vec_id"),
           graft.queries.VectorOps.toDouble(col("embedding")).as("v"))
-        .withColumn("nrm", graft.queries.VectorOps.norm(col("v"))))
+        .withColumn("nrm", graft.queries.VectorOps.norm(col("v"))), IvfHier())
     try {
       val corpus = stages.last
-      var g = Round19Queries
-        .cellGraphServe(stages.head, Round20Queries.KnnNndWidth)
+      var g = KnnGraph
+        .cellGraphServe(stages.head, KnnGraph.KnnNndWidth)
         .localCheckpoint(true)
-      for (_ <- 1 to Round20Queries.KnnNndRounds)
-        g = Round20Queries.nndRound(corpus, g)
+      for (_ <- 1 to KnnGraph.KnnNndRounds)
+        g = KnnGraph.nndRound(corpus, g)
       val replay = g.filter(col("rank") <= Round13Queries.KnnK)
         .orderBy(col("vec_id"), col("rank")).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
@@ -255,8 +257,7 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_ivf_scaled: compiled two-level pass, keyed join, pruned top-k") {
-    import graft.queries.Round20Queries
-    val (res, stages) = Round20Queries.knnGraphIvfScaledPlan(spark, sf())
+    val Staged(res, stages) = KnnGraph.plan(Embeddings.normed(spark, sf()), IvfCoarse)
     try {
       res.collect()
       val p = res.queryExecution.executedPlan.toString

@@ -7,6 +7,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Staged
+import graft.queries.Embeddings
+import graft.queries.vector.KnnGraph
 
 /** ST28: the streaming trained-IVF embedding-ANN dedup index must
   * reproduce its declared batch twin (`st_incremental_ann_ivf`,
@@ -71,7 +74,7 @@ class StreamingIvfDedupSpec extends SparkSpec {
 
   test("ST28 single-batch replay converges to the batch twin") {
     withRocksDb {
-      val ca = graft.queries.Round19Queries.trainedCentArray(spark, fixture)
+      val ca = KnnGraph.trainedCentArray(Embeddings.normed(spark, fixture))
       val d = tmpDir("ivf-stream-one")
       graft.Tables.load(spark, fixture, "embeddings")
         .coalesce(1).write.mode("overwrite").parquet(d)
@@ -87,7 +90,7 @@ class StreamingIvfDedupSpec extends SparkSpec {
 
   test("ST28 multi-batch ordered replay converges (earlier vectors only in state)") {
     withRocksDb {
-      val ca = graft.queries.Round19Queries.trainedCentArray(spark, fixture)
+      val ca = KnnGraph.trainedCentArray(Embeddings.normed(spark, fixture))
       val d = tmpDir("ivf-stream-multi")
       val ranges = Seq((Long.MinValue, 170L), (170L, 340L), (340L, Long.MaxValue))
       ranges.zipWithIndex.foreach { case ((lo, hi), i) => stage(d, lo, hi, i) }
@@ -127,15 +130,15 @@ class StreamingIvfDedupSpec extends SparkSpec {
       val prefixEmb = allEmb.filter(col("vec_id") < 340L)
 
       // generation A: prefix-trained quantizer, prefix stream
-      val caA = Round19Queries.trainedCentArrayFrom(vecsOf(prefixEmb))
+      val caA = KnnGraph.trainedCentArray(vecsOf(prefixEmb))
       val dA = tmpDir("ivf-reindex-genA")
       prefixEmb.coalesce(1).write.mode("overwrite").parquet(dA)
       val gotA = EventStreams.runToMemoryAvailableNow(
         IvfDedupStream.incrementalIvfDedup(
           AnnDedupStream.readEmbeddings(spark, dA), caA).toDF(),
         "conv_ivfdedup_genA", "append")
-      val (twinA, stagesA) =
-        Round19Queries.annIvfTrainedPlanFrom(vecsOf(prefixEmb))
+      val Staged(twinA, stagesA) =
+        Round19Queries.annIvfTrainedPlan(vecsOf(prefixEmb))
       val dupsA =
         try twinA.filter(col("status") === "dup")
           .select(col("vec_id"), col("dup_of"), col("cosine"))
@@ -147,7 +150,7 @@ class StreamingIvfDedupSpec extends SparkSpec {
       // the refresh is REAL: the retrained quantizer must re-assign at
       // least one prefix vector (otherwise the arm could pass with
       // identical generations and prove nothing)
-      val caB = Round19Queries.trainedCentArray(spark, fixture)
+      val caB = KnnGraph.trainedCentArray(Embeddings.normed(spark, fixture))
       graft.functions.GraftFunctions.register(spark)
       def homes(ca: DataFrame): DataFrame = vecsOf(prefixEmb)
         .crossJoin(broadcast(ca))
