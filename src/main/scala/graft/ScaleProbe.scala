@@ -872,7 +872,7 @@ object ScaleProbe {
           else KnnGraph.graphRecallOver(spark, dir,
             KnnGraph.Builds.filterNot(_.cells.isInstanceOf[Lsh])
               .map(b => b.label -> ((base: DataFrame) =>
-                KnnGraph.plan(base, b.cells, b.refine).materialize())))
+                b.plan(base).materialize())))
         val parts = df.groupBy(col("build"))
           .agg(avg(col("recall")).as("r"), sum(col("hits")).as("h"))
           .orderBy(col("build"))

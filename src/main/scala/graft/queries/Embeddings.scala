@@ -41,10 +41,7 @@ object Embeddings {
          FROM embeddings)"""
 
   /** DuckDB replay of [[normed]]: `vecs` plus `nvecs`. */
-  val normedDuck: String =
-    """vecs AS (
-         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         FROM embeddings),
+  val normedDuck: String = duck + """,
        nvecs AS (
          SELECT vec_id, v, %s AS nrm FROM vecs)""".format(VectorOps.duckNorm("v"))
 }

@@ -44,6 +44,7 @@ import graft.Tables
 object Round11bQueries {
 
   import Hash60.{h60Duck, h60Spark}
+  import SimilarityQueries.Dim
 
   // ── k-means constants ──────────────────────────────────────────────
   /** Clusters; init = the first K corpus vectors (deterministic seed,
@@ -52,8 +53,6 @@ object Round11bQueries {
   /** Unrolled Lloyd iterations (the convergence-driven loop is
     * `kmeansUntil` below, same builder). */
   val KmIters = 3
-  /** Embedding dimensionality (FIXTURES.md). */
-  val Dim = 64
 
   // ── logistic-regression constants ──────────────────────────────────
   val LrIters = 3

@@ -38,6 +38,7 @@ object Round13Queries {
 
   import SimilarityQueries.NBits
   import vector.KnnGraph
+  import vector.KnnGraph.KnnK
   import vector.KnnGraph.Cells.Lsh
 
   /** Synchronous label-propagation rounds (fixed — both engines replay
@@ -53,9 +54,6 @@ object Round13Queries {
 
   /** l-diversity threshold: a QI cell needs ≥ L distinct users. */
   val LDiversity = 3
-
-  /** kNN graph degree. */
-  final val KnnK = 5
 
   /** Monroe-prior total pseudo-count and report size. */
   val OddsAlpha0 = 500.0

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Layouts, Staged}
 import vector.KnnGraph
+import vector.KnnGraph.KnnAutoMinBits
 import vector.KnnGraph.Cells.LshAuto
 import Round13bQueries.{KcoreK, KcorePeels, kcoreSql, nodeStr}
 
@@ -70,21 +71,6 @@ object Round16Queries {
     * sf0.001), so the cap path is genuinely exercised.
     */
   val TriCap = 32
-
-  /** Auto-width ANN signature bounds: bits = clamp(⌈log2 n⌉, min, max).
-    * Max 18 keeps the per-vector sign pass at 2×18 codegen'd dot
-    * products and covers corpora to ~262 k at per-bucket load ≤ 1
-    * (beyond, raise the constant — one line, not a per-dataset retune;
-    * the first probe run at max=16 showed exactly the documented
-    * failure mode: flat to ×26, then the ×52 leg's 104 k vectors
-    * crossed 2¹⁶ and candidates resumed growing ∝ n²/2¹⁶ — 10.7 →
-    * 46.0 s; at max=18 the ×52 leg derives bits=17 and the trajectory
-    * stays near-linear, BASELINE.md round-16 table); min 8 floors tiny
-    * fixtures at the teaching width so the multiprobe join stays
-    * exercised.
-    */
-  val KnnAutoMaxBits = 18
-  val KnnAutoMinBits = 8
 
   /** One co-partitioned peel: survivors `kPrev` (a `src` column)
     * shuffle-hash into the persisted edge layout, surviving-source

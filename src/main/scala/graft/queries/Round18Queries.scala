@@ -65,7 +65,8 @@ object Round18Queries {
     */
   private[graft] def lshTopkAutoServe(corpus: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import Round16Queries.{AnnAutoMaxBits, KnnAutoMinBits}
+    import Round16Queries.AnnAutoMaxBits
+    import vector.KnnGraph.KnnAutoMinBits
     import SimilarityQueries.{IvfTopK, NQueries}
     val width = corpus.agg(count(lit(1)).as("n"))
       .select(
@@ -126,7 +127,8 @@ object Round18Queries {
     * audit nests this IDENTICAL statement (one definition, no drift).
     */
   private[graft] lazy val lshTopkAutoDuckSql: String = {
-    import Round16Queries.{AnnAutoMaxBits, KnnAutoMinBits}
+    import Round16Queries.AnnAutoMaxBits
+    import vector.KnnGraph.KnnAutoMinBits
     import SimilarityQueries.{IvfTopK, NQueries}
     def sigSql(t: Int) = (0 until AnnAutoMaxBits).map { b =>
       val lits = SimilarityQueries.hyperplaneSet(t, AnnAutoMaxBits)(b)

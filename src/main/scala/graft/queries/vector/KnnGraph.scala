@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Layouts, Staged}
-import graft.queries.{Embeddings, QueryDef, Round11bQueries, Round13Queries,
-  Round16Queries, Round17Queries, SimilarityQueries, VectorOps}
+import graft.queries.{Embeddings, QueryDef, Round11bQueries, Round17Queries,
+  SimilarityQueries, VectorOps}
 import graft.queries.Hash60.{idHash60Duck, idHash60Spark}
 
 /** The kNN-graph family: every declared build is ONE function of a
@@ -40,7 +40,25 @@ import graft.queries.Hash60.{idHash60Duck, idHash60Spark}
   * cell stage served at internal width K' = 2k.
   */
 object KnnGraph {
-  import Round13Queries.KnnK
+
+  /** kNN graph degree. */
+  final val KnnK = 5
+
+  /** Auto-width sign-LSH signature bounds: bits = clamp(⌈log2 n⌉, min,
+    * max), shared by [[Cells.LshAuto]] and the auto-width ANN serving
+    * indexes. Max 18 keeps the per-vector sign pass at 2×18 codegen'd
+    * dot products and covers corpora to ~262 k at per-bucket load ≤ 1
+    * (beyond, raise the constant — one line, not a per-dataset retune;
+    * the first probe run at max=16 showed exactly the documented
+    * failure mode: flat to ×26, then the ×52 leg's 104 k vectors
+    * crossed 2¹⁶ and candidates resumed growing ∝ n²/2¹⁶ — 10.7 →
+    * 46.0 s; at max=18 the ×52 leg derives bits=17 and the trajectory
+    * stays near-linear, BASELINE.md round-16 table); min 8 floors tiny
+    * fixtures at the teaching width so the multiprobe join stays
+    * exercised.
+    */
+  final val KnnAutoMaxBits = 18
+  final val KnnAutoMinBits = 8
 
   /** Signature width of the scaled sign-LSH twin (2^12 buckets — the
     * log2 rule's setting for the ×26–×50 probe corpora).
@@ -95,17 +113,22 @@ object KnnGraph {
   object Cells {
     final case class Lsh(bits: Int) extends Cells
     case object LshAuto extends Cells
-    final case class IvfSampled(nprobe: Int = KnnIvfNprobe) extends Cells
-    case object IvfTrained extends Cells
-    case object IvfCoarse extends Cells
-    final case class IvfHier(fineIters: Int = KnnFineIters) extends Cells
+    /** The IVF strategies: each builds a persisted cell stage. */
+    sealed trait Ivf extends Cells
+    final case class IvfSampled(nprobe: Int = KnnIvfNprobe) extends Ivf
+    case object IvfTrained extends Ivf
+    case object IvfCoarse extends Ivf
+    final case class IvfHier(fineIters: Int = KnnFineIters) extends Ivf
   }
 
-  /** Optional refinement over a cell strategy's stage. */
-  sealed trait Refine
+  /** Optional refinement, typed by the strategies it accepts: `Off`
+    * takes any, `Nnd` only an IVF strategy (it refines a cell stage), so
+    * an LSH strategy with NN-Descent does not compile.
+    */
+  sealed trait Refine[-C <: Cells]
   object Refine {
-    case object Off extends Refine
-    final case class Nnd(rounds: Int = KnnNndRounds) extends Refine
+    case object Off extends Refine[Cells]
+    final case class Nnd(rounds: Int = KnnNndRounds) extends Refine[Cells.Ivf]
   }
 
   import Cells._
@@ -115,30 +138,30 @@ object KnnGraph {
   /** The graph over a prepared (vec_id, v, nrm) corpus, un-materialized,
     * plus its persisted stages.
     */
-  def plan(corpus: DataFrame, cells: Cells, refine: Refine = Refine.Off,
-      k: Int = KnnK): Staged =
-    planWith(corpus, cells, refine, k, None)
+  def plan[C <: Cells](corpus: DataFrame, cells: C,
+      refine: Refine[C] = Refine.Off): Staged =
+    planWith(corpus, cells, refine, None)
 
   /** The materialized graph over the `embeddings` table. */
-  def build(s: SparkSession, dir: String, cells: Cells,
-      refine: Refine = Refine.Off): DataFrame =
+  def build[C <: Cells](s: SparkSession, dir: String, cells: C,
+      refine: Refine[C] = Refine.Off): DataFrame =
     plan(Embeddings.normed(s, dir), cells, refine).materialize()
 
   /** `ca`: a caller-trained quantizer over the same corpus for the
     * trained strategies (None = self-train).
     */
-  private def planWith(corpus: DataFrame, cells: Cells, refine: Refine,
-      k: Int, ca: Option[DataFrame]): Staged = (cells, refine) match {
-    case (Lsh(bits), Refine.Off) => lshPlan(corpus, bits, k)
-    case (LshAuto, Refine.Off) => lshAutoPlan(corpus, k)
-    case (_: Lsh | LshAuto, _) =>
-      throw new IllegalArgumentException(s"$refine needs a cell strategy, got $cells")
-    case (_, Refine.Off) =>
+  private def planWith[C <: Cells](corpus: DataFrame, cells: C,
+      refine: Refine[C], ca: Option[DataFrame]): Staged = refine match {
+    case Refine.Nnd(rounds) =>
       val st = cellStage(corpus, cells, ca)
-      Staged(cellGraphServe(st.head, k), st)
-    case (_, Refine.Nnd(rounds)) =>
-      val st = cellStage(corpus, cells, ca)
-      Staged(nndChainOver(st, rounds, k), st)
+      Staged(nndChainOver(st, rounds), st)
+    case Refine.Off => cells match {
+      case Lsh(bits) => lshPlan(corpus, bits)
+      case LshAuto => lshAutoPlan(corpus)
+      case ivf: Ivf =>
+        val st = cellStage(corpus, ivf, ca)
+        Staged(cellGraphServe(st.head), st)
+    }
   }
 
   /** Two-table multiprobe sign-LSH at `bits`: per table the own bucket
@@ -150,7 +173,7 @@ object KnnGraph {
     * two vectors (the first draft shuffled vectors per candidate and
     * went quadratic in shuffle bytes — ×10 probe 241 s).
     */
-  private def lshPlan(base: DataFrame, bits: Int, k: Int): Staged = {
+  private def lshPlan(base: DataFrame, bits: Int): Staged = {
     val tables = knnTables(bits)
     def bucketCol(t: Int) = (0 until bits).map { b =>
       when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
@@ -176,7 +199,7 @@ object KnnGraph {
     }.reduce(_ unionByName _)
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
-    Staged(topK(cand, k).orderBy(col("vec_id"), col("rank")), Seq(all))
+    Staged(topK(cand, KnnK).orderBy(col("vec_id"), col("rank")), Seq(all))
   }
 
   /** Sign-LSH at a width derived IN-PLAN: all KnnAutoMaxBits signs are
@@ -187,8 +210,7 @@ object KnnGraph {
     * Multiprobe flips come from a runtime-length sequence, so only
     * active bits flip.
     */
-  private def lshAutoPlan(base: DataFrame, k: Int): Staged = {
-    import Round16Queries.{KnnAutoMaxBits, KnnAutoMinBits}
+  private def lshAutoPlan(base: DataFrame): Staged = {
     val tables = knnTables(KnnAutoMaxBits)
     def sigCol(t: Int) = (0 until KnnAutoMaxBits).map { b =>
       when(VectorOps.dot(col("v"), typedLit(tables(t)(b))) >= 0.0,
@@ -228,7 +250,7 @@ object KnnGraph {
     val deduped = cand(0).unionByName(cand(1))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
-    Staged(topK(deduped, k).orderBy(col("vec_id"), col("rank")), Seq(all))
+    Staged(topK(deduped, KnnK).orderBy(col("vec_id"), col("rank")), Seq(all))
   }
 
   /** Top-k per query of scored (query_id, neighbor_id, cosine) rows,
@@ -248,13 +270,12 @@ object KnnGraph {
     * single-level strategies, (cells, corpus) for the two-level ones.
     * Each cells row is (vec_id, v, nrm, cells) with cells[0] the home.
     */
-  private[graft] def cellStage(corpus: DataFrame, cells: Cells,
+  private[graft] def cellStage(corpus: DataFrame, cells: Ivf,
       ca: Option[DataFrame] = None): Seq[DataFrame] = cells match {
     case IvfSampled(nprobe) => Seq(sampledCells(corpus, nprobe))
     case IvfTrained => Seq(trainedCells(corpus, ca))
     case IvfCoarse => coarseCells(corpus, ca)
     case IvfHier(fineIters) => hierCells(corpus, fineIters, ca)
-    case lsh => throw new IllegalArgumentException(s"$lsh has no cell stage")
   }
 
   /** Hash-residue sample (h60(vec_id) % stride = 0 — id-distribution-
@@ -438,7 +459,7 @@ object KnnGraph {
     */
   private[graft] def fineLloydRound(routed: DataFrame, fc: DataFrame)
       : DataFrame = {
-    val dim = Round11bQueries.Dim
+    val dim = SimilarityQueries.Dim
     val assigned = routed
       .select(col("cc").getItem(0).as("c2"), col("v"))
       .join(broadcast(fineArr(fc)), Seq("c2"))
@@ -585,33 +606,31 @@ object KnnGraph {
     * seed (unsorted — round 1 repartitions it), `rounds` rounds at K',
     * then ranks 1..k of the final lists.
     */
-  private def nndChainOver(stages: Seq[DataFrame], rounds: Int,
-      k: Int): DataFrame =
+  private def nndChainOver(stages: Seq[DataFrame], rounds: Int): DataFrame =
     nndChainOverSeed(stages.last,
       cellGraphServe(stages.head, KnnNndWidth, sorted = false)
         .localCheckpoint(true),
-      rounds, k, releaseSeed = true)
+      rounds, releaseSeed = true)
 
   /** The refinement rounds over an already-materialized width-K' seed.
     * `releaseSeed` frees the seed once round 1 has materialized (the
     * recall audit owns its shared seeds and releases them itself).
     */
   private def nndChainOverSeed(corpus: DataFrame, seed: DataFrame,
-      rounds: Int, k: Int = KnnK, releaseSeed: Boolean = false)
-      : DataFrame = {
+      rounds: Int, releaseSeed: Boolean = false): DataFrame = {
     var g = seed
     for (r <- 1 to rounds) {
       g = nndRound(corpus, g)
       if (r == 1 && releaseSeed) Layouts.releaseCheckpoint(seed)
     }
-    g.filter(col("rank") <= k).orderBy(col("vec_id"), col("rank"))
+    g.filter(col("rank") <= KnnK).orderBy(col("vec_id"), col("rank"))
   }
 
   // ════ DuckDB oracle ════════════════════════════════════════════════
 
-  /** The oracle statement of `plan(corpus, cells, refine, k)`. */
-  def duckSql(cells: Cells, refine: Refine = Refine.Off, k: Int = KnnK)
-      : String = {
+  /** The oracle statement of `plan(corpus, cells, refine)` at degree `k`. */
+  def duckSql[C <: Cells](cells: C, refine: Refine[C] = Refine.Off,
+      k: Int = KnnK): String = {
     val ind = (cells, refine) match {
       case (_: IvfSampled | IvfTrained, Refine.Off) => "    "
       case _ => "      "
@@ -625,17 +644,19 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
     * cosine, rank) with `nvecs` in scope for the LSH and NN-Descent
     * chains — what the τ-edge oracles nest.
     */
-  def duckCtes(cells: Cells, refine: Refine = Refine.Off): String =
-    (cells, refine) match {
-      case (_, Refine.Nnd(rounds)) =>
-        nndDuckCtes(duckSql(cells, Refine.Off, KnnNndWidth), rounds)
-      case (Lsh(bits), _) => lshDuckCtes(bits)
-      case (LshAuto, _) => lshAutoDuckCtes
-      case (IvfSampled(nprobe), _) => sampledDuckCtes(nprobe)
-      case (IvfTrained, _) => trainedDuckCtes
-      case (IvfCoarse, _) => coarseDuckCtes
-      case (IvfHier(fineIters), _) => hierDuckCtes(fineIters)
+  def duckCtes[C <: Cells](cells: C, refine: Refine[C] = Refine.Off)
+      : String = refine match {
+    case Refine.Nnd(rounds) =>
+      nndDuckCtes(duckSql(cells, Refine.Off, KnnNndWidth), rounds)
+    case Refine.Off => cells match {
+      case Lsh(bits) => lshDuckCtes(bits)
+      case LshAuto => lshAutoDuckCtes
+      case IvfSampled(nprobe) => sampledDuckCtes(nprobe)
+      case IvfTrained => trainedDuckCtes
+      case IvfCoarse => coarseDuckCtes
+      case IvfHier(fineIters) => hierDuckCtes(fineIters)
     }
+  }
 
   private val rankedDuck =
     """ranked AS (
@@ -688,7 +709,6 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
   }
 
   private lazy val lshAutoDuckCtes: String = {
-    import Round16Queries.{KnnAutoMaxBits, KnnAutoMinBits}
     val tables = knnTables(KnnAutoMaxBits)
     def sigSql(t: Int) = (0 until KnnAutoMaxBits).map { b =>
       val lits = tables(t)(b).mkString("[", ", ", "]")
@@ -866,7 +886,7 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
     val scd = VectorOps.duckDist2("f.cv", "c.cv")
     val fad = VectorOps.duckDist2("a.v", "c.cv")
     val fd = VectorOps.duckDist2("p.v", "c.cv")
-    val dim = Round11bQueries.Dim
+    val dim = SimilarityQueries.Dim
     val fineRounds = (1 to fineIters).map { i =>
       s"""fa$i AS (
           SELECT vec_id, v, c2, f FROM (
@@ -959,13 +979,14 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
   /** One declared kNN-graph build: row name, recall-audit label,
     * strategy, doc.
     */
-  final case class Build(name: String, label: String, cells: Cells,
-      refine: Refine, doc: String) {
+  final case class Build[C <: Cells](name: String, label: String, cells: C,
+      refine: Refine[C], doc: String) {
     lazy val oracle: String = duckSql(cells, refine)
+    def plan(corpus: DataFrame): Staged = KnnGraph.plan(corpus, cells, refine)
   }
 
   /** The nine declared builds, in recall-audit order. */
-  val Builds: Seq[Build] = Seq(
+  val Builds: Seq[Build[_ <: Cells]] = Seq(
     // Every vector retrieves its top-k among multiprobe bucket-mates
     // over two independent tables; candidate volume is Σ bucket-load²
     // per table, never all-pairs.
@@ -987,8 +1008,7 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
         "constant as the corpus grows."),
     Build("sim_knn_graph_auto", "lsh_auto", LshAuto, Refine.Off,
       s"Auto-width kNN graph (k=$KnnK): bits = " +
-        s"clamp(ceil(log2 n), ${Round16Queries.KnnAutoMinBits}, " +
-        s"${Round16Queries.KnnAutoMaxBits}) derived " +
+        s"clamp(ceil(log2 n), $KnnAutoMinBits, $KnnAutoMaxBits) derived " +
         "IN-PLAN from a 1-row broadcast count scalar via length(bin(n-1)) " +
         "(bit-exact in both engines); the bucket is a MaxBits signature " +
         "masked to its low `bits` bits, multiprobe flips generated from a " +
@@ -1160,13 +1180,13 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
     * stages. `release` frees everything once the audit's graphs are
     * materialized.
     */
-  private final class AuditMemo(refined: Set[Cells]) {
+  private final class AuditMemo(refined: Set[Ivf]) {
     private var base0: DataFrame = null
     private var ca: Option[DataFrame] = None
     private val stages =
-      scala.collection.mutable.LinkedHashMap.empty[Cells, Seq[DataFrame]]
+      scala.collection.mutable.LinkedHashMap.empty[Ivf, Seq[DataFrame]]
     private val seeds =
-      scala.collection.mutable.LinkedHashMap.empty[Cells, DataFrame]
+      scala.collection.mutable.LinkedHashMap.empty[Ivf, DataFrame]
 
     private def pinned(base: DataFrame): DataFrame = {
       if (base0 == null) base0 = base
@@ -1182,25 +1202,28 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
         case _ => None
       }
 
-    private def stage(base: DataFrame, cells: Cells): Seq[DataFrame] =
+    private def stage(base: DataFrame, cells: Ivf): Seq[DataFrame] =
       stages.getOrElseUpdate(cells,
         cellStage(pinned(base), cells, trainedCa(base, cells)))
 
-    private def seed(base: DataFrame, cells: Cells): DataFrame =
+    private def seed(base: DataFrame, cells: Ivf): DataFrame =
       seeds.getOrElseUpdate(cells,
         cellGraphServe(stage(base, cells).head, KnnNndWidth, sorted = false)
           .localCheckpoint(true))
 
-    def build(base: DataFrame, b: Build): DataFrame = b.refine match {
-      case Refine.Nnd(rounds) =>
-        nndChainOverSeed(stage(base, b.cells).last, seed(base, b.cells),
-          rounds).localCheckpoint(true)
-      case Refine.Off if refined(b.cells) =>
-        seed(base, b.cells).filter(col("rank") <= KnnK).localCheckpoint(true)
-      case Refine.Off =>
-        planWith(base, b.cells, b.refine, KnnK, trainedCa(base, b.cells))
-          .materialize()
-    }
+    def build[C <: Cells](base: DataFrame, b: Build[C]): DataFrame =
+      b.refine match {
+        case Refine.Nnd(rounds) =>
+          nndChainOverSeed(stage(base, b.cells).last, seed(base, b.cells),
+            rounds).localCheckpoint(true)
+        case Refine.Off => b.cells match {
+          case ivf: Ivf if refined(ivf) =>
+            seed(base, ivf).filter(col("rank") <= KnnK).localCheckpoint(true)
+          case cells =>
+            planWith(base, cells, Refine.Off, trainedCa(base, cells))
+              .materialize()
+        }
+      }
 
     def release(): Unit =
       (stages.values.flatten ++ seeds.values ++ ca)
@@ -1209,13 +1232,13 @@ ${ind}WHERE rank <= $k ORDER BY vec_id, rank"""
 
   /** The nine declared rows plus the recall audit. */
   val defs: Seq[QueryDef] = Builds.map { b =>
-    QueryDef(b.name, (s, dir) => build(s, dir, b.cells, b.refine),
+    QueryDef(b.name, (s, dir) => b.plan(Embeddings.normed(s, dir)).materialize(),
       Some(b.oracle), b.doc)
   } :+ QueryDef(
     "sim_knn_graph_recall",
     (s, dir) => {
-      val memo = new AuditMemo(
-        Builds.filter(_.refine != Refine.Off).map(_.cells).toSet)
+      val memo = new AuditMemo(Builds.collect {
+        case Build(_, _, ivf: Ivf, Refine.Nnd(_), _) => ivf }.toSet)
       try graphRecallOver(s, dir,
         Builds.map(b => b.label -> ((base: DataFrame) => memo.build(base, b))))
       finally memo.release()

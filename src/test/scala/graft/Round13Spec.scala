@@ -257,7 +257,7 @@ class Round13Spec extends SparkSpec {
       while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
       d / math.sqrt(na * nb)
     }
-    val k = Round13Queries.KnnK
+    val k = KnnGraph.KnnK
     var hit = 0; var tot = 0
     vecs.foreach { case (v, av) =>
       val brute = vecs.filter(_._1 != v)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.queries.{RetrievalQueries, Round13bQueries, Round16Queries}
+import graft.queries.vector.KnnGraph
 
 /** Round-16 operator invariants:
   *
@@ -119,7 +120,6 @@ class Round16Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_auto: in-plan width rule + full combinatorial replay") {
-    import graft.queries.Round13Queries
     val out = run("sim_knn_graph_auto").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSeq
@@ -128,14 +128,14 @@ class Round16Spec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
     val n = vecs.length.toLong
     // the width rule, independently: bits = clamp(bitlen(n-1), min, max)
-    val bits = math.max(Round16Queries.KnnAutoMinBits,
-      math.min(Round16Queries.KnnAutoMaxBits,
+    val bits = math.max(KnnGraph.KnnAutoMinBits,
+      math.min(KnnGraph.KnnAutoMaxBits,
         64 - java.lang.Long.numberOfLeadingZeros(n - 1L)))
-    assert(bits > Round16Queries.KnnAutoMinBits,
+    assert(bits > KnnGraph.KnnAutoMinBits,
       "fixture too small — the derived width never leaves the floor")
     val mask = (1 << bits) - 1
     // sequential-fold dot (the DotProduct expression's order), exactly
-    val tables = graft.queries.vector.KnnGraph.knnTables(Round16Queries.KnnAutoMaxBits)
+    val tables = KnnGraph.knnTables(KnnGraph.KnnAutoMaxBits)
     def dot(a: Array[Double], b: Seq[Double]): Double = {
       var acc = 0.0; var k = 0
       while (k < a.length) { acc += a(k) * b(k); k += 1 }
@@ -145,7 +145,7 @@ class Round16Spec extends SparkSpec {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val sigs = vecs.map { case (id, v) =>
       val s = (0 to 1).map { t =>
-        (0 until Round16Queries.KnnAutoMaxBits)
+        (0 until KnnGraph.KnnAutoMaxBits)
           .map(b => if (dot(v, tables(t)(b)) >= 0.0) 1 << b else 0).sum
       }
       (id, v, math.sqrt(dot(v, v)), s)
@@ -168,7 +168,7 @@ class Round16Spec extends SparkSpec {
           (qid, nid, r6(dot(nv, qv) / (nn * qn)))
         }
         .sortBy { case (_, nid, cos) => (-cos, nid) }
-        .take(Round13Queries.KnnK)
+        .take(KnnGraph.KnnK)
         .zipWithIndex
         .map { case ((q, nid, cos), i) => (q, i + 1, nid, cos) }
     }.sortBy(x => (x._1, x._2)).toSeq
@@ -216,7 +216,7 @@ class Round16Spec extends SparkSpec {
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
     val n = vecs.length.toLong
-    val bits = math.max(Round16Queries.KnnAutoMinBits,
+    val bits = math.max(KnnGraph.KnnAutoMinBits,
       math.min(Round16Queries.AnnAutoMaxBits,
         64 - java.lang.Long.numberOfLeadingZeros(n - 1L)))
     val maskL = (1L << bits) - 1L

@@ -79,7 +79,7 @@ class Round19Spec extends SparkSpec {
       val top = cand
         .map { case (nid, nv) => (nid, cosine6(qv, nv)) }
         .sortBy { case (nid, c) => (-c, nid) }
-        .take(graft.queries.Round13Queries.KnnK)
+        .take(graft.queries.vector.KnnGraph.KnnK)
         .zipWithIndex
         .map { case ((nid, c), i) => (i + 1, nid, c) }
       qid -> top.toSeq
@@ -104,7 +104,7 @@ class Round19Spec extends SparkSpec {
 
   test("sim_knn_graph_recall: arithmetic replays from an independent truth and the declared builds") {
     import graft.queries.vector.KnnGraph.KnnRecallPanel
-    import graft.queries.Round13Queries.KnnK
+    import graft.queries.vector.KnnGraph.KnnK
     // independent truth: brute top-k per panel query
     val truth: Map[Long, Set[Long]] = vecs.take(KnnRecallPanel).map {
       case (qid, qv) =>

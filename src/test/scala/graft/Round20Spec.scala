@@ -42,7 +42,6 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_ivf_scaled: bounded load measured on the fixture") {
-    import graft.queries.Round13Queries
     val Staged(res, stages) = KnnGraph.plan(Embeddings.normed(spark, sf()), IvfCoarse)
     try {
       val out = res.collect()
@@ -69,13 +68,12 @@ class Round20Spec extends SparkSpec {
         val ranks = rows.map(_.getInt(1)).sorted
         assert(ranks.head == 1 && ranks.toSeq == (1 to ranks.length),
           s"ranks must be contiguous 1..k, got ${ranks.toSeq}")
-        assert(ranks.length <= Round13Queries.KnnK)
+        assert(ranks.length <= KnnGraph.KnnK)
       }
     } finally stages.foreach(_.unpersist(false))
   }
 
   test("sim_knn_graph_nnd: each round only improves the k-NN lists") {
-    import graft.queries.Round13Queries
     // NN-Descent's defining invariant: round r's candidate set is a
     // SUPERSET of round r-1's edges, so after re-ranking, every
     // query's list is pointwise at-least-as-good (cosine at each rank
@@ -114,7 +112,7 @@ class Round20Spec extends SparkSpec {
         val declared = run("sim_knn_graph_nnd").collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
           .sortBy(x => (x._1, x._2))
-        val replay = g2.filter(col("rank") <= Round13Queries.KnnK)
+        val replay = g2.filter(col("rank") <= KnnGraph.KnnK)
           .orderBy(col("vec_id"), col("rank")).collect()
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
         assert(declared.toSeq == replay.toSeq,
@@ -179,7 +177,6 @@ class Round20Spec extends SparkSpec {
   }
 
   test("sim_knn_graph_ivf_hier: trained fine level keeps the load discipline") {
-    import graft.queries.Round13Queries
     val Staged(res, stages) = KnnGraph.plan(Embeddings.normed(spark, sf()), IvfHier())
     try {
       val out = res.collect()
@@ -225,13 +222,12 @@ class Round20Spec extends SparkSpec {
         val ranks = rows.map(_.getInt(1)).sorted
         assert(ranks.head == 1 && ranks.toSeq == (1 to ranks.length),
           s"ranks must be contiguous 1..k, got ${ranks.toSeq}")
-        assert(ranks.length <= Round13Queries.KnnK)
+        assert(ranks.length <= KnnGraph.KnnK)
       }
     } finally stages.foreach(_.unpersist(false))
   }
 
   test("sim_knn_graph_nnd_hier is seed + KnnNndRounds unrolled rounds") {
-    import graft.queries.Round13Queries
     val stages = KnnGraph.cellStage(
       graft.Tables.load(spark, sf(), "embeddings")
         .select(col("vec_id"),
@@ -244,7 +240,7 @@ class Round20Spec extends SparkSpec {
         .localCheckpoint(true)
       for (_ <- 1 to KnnGraph.KnnNndRounds)
         g = KnnGraph.nndRound(corpus, g)
-      val replay = g.filter(col("rank") <= Round13Queries.KnnK)
+      val replay = g.filter(col("rank") <= KnnGraph.KnnK)
         .orderBy(col("vec_id"), col("rank")).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       val declared = run("sim_knn_graph_nnd_hier").collect()

@@ -119,7 +119,7 @@ class StreamingAnnDedupSpec extends SparkSpec {
       // — the deployment analogue is a width refresh as the accepted
       // index grows (one re-index event, not a per-dataset retune)
       val n = graft.Tables.load(spark, fixture, "embeddings").count()
-      val bits = math.max(graft.queries.Round16Queries.KnnAutoMinBits,
+      val bits = math.max(graft.queries.vector.KnnGraph.KnnAutoMinBits,
         math.min(graft.queries.Round16Queries.AnnAutoMaxBits,
           64 - java.lang.Long.numberOfLeadingZeros(n - 1)))
       val d = tmpDir("ann-stream-auto")
